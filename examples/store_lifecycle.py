@@ -12,9 +12,8 @@ state machine a 100 TB corpus store lives in:
                   ->  delete_ids (tombstones, O(batch))
                   ->  query again (anti-joined reads)
                   ->  purge_deleted (ATOMIC generational cutover;
-                      the meta row is the pointer — round 14)
-                  ->  compact (undo append fragmentation; resolve the
-                      physical name through the generation pointer)
+                      the meta row is the pointer; the rewrite also
+                      merges append fragments)
                   ->  audit + rebucket (grow the bucket count)
                   ->  rebuild (hash-family migration, tombstone-safe)
 
@@ -34,11 +33,7 @@ from pyspark.sql import functions as F
 
 import polars_text_spark as pts
 from polars_text_spark.operators import ann_store, dedup_store
-from polars_text_spark.sources.bucketing import (
-    compact_table,
-    phys_table,
-    store_generation,
-)
+from polars_text_spark.sources.bucketing import phys_table, store_generation
 
 
 def main() -> None:
@@ -102,13 +97,13 @@ def main() -> None:
           f"{ann_store.topk_from_store(spark, 'demo_ann', qs, k=5, dim=64).count()}")
     ann_store.purge_deleted(spark, "demo_ann")
     # resolve the PHYSICAL name through the generation pointer —
-    # after any maintenance op the unsuffixed name is gone (round 14)
+    # after any maintenance op the unsuffixed name is gone
     bands_phys = phys_table(
         "demo_ann", "bands", store_generation(spark, "demo_ann")
     )
-    n_files = compact_table(spark, bands_phys)
-    print(f"post-purge compaction: {n_files} band files ({bands_phys})")
-    print(f"top-k after purge+compact: "
+    print(f"post-purge band table: {bands_phys} (the purge's rewrite "
+          "also merged the append fragments, one file per bucket)")
+    print(f"top-k after purge: "
           f"{ann_store.topk_from_store(spark, 'demo_ann', qs, k=5, dim=64).count()}")
     # the store grew past its write-time bucket count: audit, then
     # one rewrite shuffle per table moves it to 8 buckets (answers

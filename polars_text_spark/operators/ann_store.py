@@ -18,11 +18,11 @@ Store layout (two bucketed catalog tables + the meta pointer):
 ``<name>_bands(id, band_key string)`` bucketed+sorted by ``band_key``;
 ``<name>_vectors(id, u array<double>)`` bucketed+sorted by ``id``.
 Signature parameters are embedded at write time; pass the same ones at
-query time. Since round 14 the PHYSICAL table names are generational
-(``<name>_bands_g1`` after the first maintenance rewrite) and
-``<name>_meta`` is the atomic pointer — resolve through
-``sources.bucketing.phys_table``/``store_generation`` instead of
-hardcoding names (see :mod:`polars_text_spark.operators.dedup_store`).
+query time. The PHYSICAL table names are generational
+(``<name>_bands_g1`` after the first maintenance cutover) and
+``<name>_meta`` is the atomic pointer: every path opens the store
+through :data:`ANN_STORE`, the store core's spec of this layout
+(:class:`polars_text_spark.sources.bucketing.StoreSpec`).
 """
 
 from __future__ import annotations
@@ -36,21 +36,7 @@ from polars_text_spark.operators.similarity import (
     sha_band_keys,
     with_l2_normalized,
 )
-from polars_text_spark.sources.bucketing import (
-    check_generation_unchanged as _check_generation_unchanged,
-    clear_table,
-    minus_tombstones as _minus_tombstones,
-    phys_table,
-    read_meta,
-    probe_id_clash,
-    read_tombstones as _tombstones,
-    rewrite_generation,
-    store_generation,
-    sweep_stale_generations,
-    tombstone_ids,
-    write_bucketed,
-    write_meta_row,
-)
+from polars_text_spark.sources.bucketing import StoreSpec, tombstone_ids
 
 __all__ = [
     "append_ann_shard",
@@ -63,38 +49,35 @@ __all__ = [
     "write_ann_store",
 ]
 
-_SUFFIXES = ("bands", "vectors")
+ANN_STORE = StoreSpec(
+    kind="ann",
+    writer="write_ann_store",
+    tables=(("bands", ("band_key",)), ("vectors", ("id",))),
+    meta="dim int, num_planes int, bands int, buckets int",
+)
 
 
-def _phys(spark: SparkSession, name: str, suffix: str) -> str:
-    """Current physical catalog name of a store table, resolved
-    through the meta generation pointer (round 14 — see
-    :mod:`polars_text_spark.operators.dedup_store`)."""
-    return phys_table(name, suffix, store_generation(spark, name))
-
-
-def _read_store(spark: SparkSession, name: str, suffix: str) -> DataFrame:
-    return spark.table(_phys(spark, name, suffix))
-
-
-def _write_meta(
-    spark: SparkSession,
-    name: str,
-    *,
-    dim: int,
-    num_planes: int,
-    bands: int,
-    buckets: int,
-    gen: int,
-    reset: bool = False,
-) -> None:
-    meta = spark.createDataFrame(
-        [(int(dim), int(num_planes), int(bands), int(buckets), int(gen))],
-        "dim int, num_planes int, bands int, buckets int, gen int",
+def _projections(
+    df: DataFrame, id_col: str, vec_col: str, params: dict
+) -> tuple[DataFrame, DataFrame]:
+    """(banded, unit) frames of ``df`` under the store's signature
+    ``params`` — the store's two tables. Null vectors are dropped;
+    wrong-dim vectors fail loudly inside ``sha_band_keys`` when the
+    banding projection first runs (an in-plan guard, no extra pass)."""
+    base = df.where(F.col(vec_col).isNotNull())
+    banded = base.select(
+        F.col(id_col).alias("id"),
+        F.explode(
+            sha_band_keys(
+                F.col(vec_col), dim=params["dim"],
+                num_planes=params["num_planes"], bands=params["bands"],
+            )
+        ).alias("band_key"),
     )
-    # reset=True starts a fresh meta log (generation 0); cutovers
-    # APPEND the next-gen row — the atomic flip (see write_meta_row)
-    write_meta_row(spark, meta, f"{name}_meta", reset=reset)
+    unit = with_l2_normalized(
+        base.select(F.col(id_col).alias("id"), vec_col), vec_col, "u"
+    ).select("id", "u")
+    return banded, unit
 
 
 def write_ann_store(
@@ -109,128 +92,22 @@ def write_ann_store(
     buckets: int = 8,
 ) -> None:
     """Materialize ``<name>_bands`` and ``<name>_vectors`` bucketed
-    tables for ``vectors`` (one pass over the vectors each). A fresh
-    write is generation 0 (unsuffixed physical names); physical tables
-    a previous store of the same name left behind — including suffixed
-    maintenance generations — are swept first."""
-    sweep_stale_generations(
-        vectors.sparkSession, name, _SUFFIXES, -1
-    )  # current_gen=-1 matches no table: drop ALL generations
-    base = vectors.where(F.col(vec_col).isNotNull())
-    banded = base.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            sha_band_keys(
-                F.col(vec_col), dim=dim, num_planes=num_planes, bands=bands
-            )
-        ).alias("band_key"),
-    )
-    unit = with_l2_normalized(
-        base.select(F.col(id_col).alias("id"), vec_col), vec_col, "u"
-    ).select("id", "u")
-    # The two table writes are independent projections of the same
-    # input — overlap them from a small thread pool (guide §2.6) so
-    # the second write's tasks back-fill the first's job tail. A fresh
-    # write is generation 0 and nothing reads the store mid-write, so
-    # commit order between the two tables carries no crash contract
-    # (unlike append, which stays bands-first).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_bands() -> None:
-        write_bucketed(
-            banded,
-            f"{name}_bands",
-            bucket_by="band_key",
-            buckets=buckets,
-            sort_by="band_key",
-        )
-
-    def _write_vectors() -> None:
-        write_bucketed(
-            unit,
-            f"{name}_vectors",
-            bucket_by="id",
-            buckets=buckets,
-            sort_by="id",
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_bands), pool.submit(_write_vectors)]:
-            fut.result()
-    # a rebuild starts a NEW store generation: tombstones from the
-    # previous generation would silently delete rows from the fresh
-    # store at read time and block re-appending their ids
-    clear_table(vectors.sparkSession, f"{name}_tombstones")
-    # signature parameters ride with the store so a query-time mismatch
-    # (whose band keys could NEVER collide -> silent recall-0) fails
-    # loudly; buckets rides too so incremental appends reuse the
-    # write-time bucket spec (a mismatched append would break the
-    # shuffle-free co-location guarantee)
-    _write_meta(
-        vectors.sparkSession,
-        name,
-        dim=dim,
-        num_planes=num_planes,
-        bands=bands,
-        buckets=buckets,
-        gen=0,
-        reset=True,  # a fresh store starts a new meta log
-    )
-
-
-def _shard_projections(
-    shard: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    num_planes: int,
-    bands: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(banded, unit) frames of a shard under the store's signature —
-    the same two projections :func:`write_ann_store` materializes."""
-    base = shard.where(F.col(vec_col).isNotNull())
-    banded = base.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            sha_band_keys(
-                F.col(vec_col), dim=dim, num_planes=num_planes, bands=bands
-            )
-        ).alias("band_key"),
-    )
-    unit = with_l2_normalized(
-        base.select(F.col(id_col).alias("id"), vec_col), vec_col, "u"
-    ).select("id", "u")
-    return banded, unit
-
-
-def _store_meta(
-    spark: SparkSession, name: str, *, require_buckets: bool = True
-) -> tuple[int, int, int, int | None, int]:
-    """(dim, num_planes, bands, buckets, gen) from ONE meta read —
-    callers that also need the generation must not pay a second
-    meta-log collect (round 16: it was one extra driver job per store
-    read/append)."""
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"ann store '{name}' has no meta table; (re)create it "
-            "with write_ann_store"
-        )
-    d = m.asDict()
-    has_buckets = "buckets" in d
-    if require_buckets and not has_buckets:
-        raise ValueError(
-            f"ann store '{name}' predates incremental ingest (its meta "
-            "lacks the bucket count); rewrite it with write_ann_store "
-            "before appending shards"
-        )
-    return (
-        int(m["dim"]),
-        int(m["num_planes"]),
-        int(m["bands"]),
-        int(m["buckets"]) if has_buckets else None,
-        int(d["gen"]) if d.get("gen") is not None else 0,
+    tables for ``vectors`` (one pass over the vectors each) as a fresh
+    generation-0 store, replacing any previous store of the same name
+    and its tombstones. The two tables are independent projections of
+    the same input and nothing reads a store mid-write, so they are
+    written concurrently (appends, by contrast, stay bands-first). The
+    signature parameters ride in the meta row — a query-time mismatch,
+    whose band keys could NEVER collide, fails loudly — and so does the
+    bucket count, which appends reuse to keep the store co-located."""
+    params = {
+        "dim": dim, "num_planes": num_planes, "bands": bands,
+        "buckets": buckets,
+    }
+    banded, unit = _projections(vectors, id_col, vec_col, params)
+    ANN_STORE.create(
+        vectors.sparkSession, name, params,
+        lambda store: store.write_tables({"bands": banded, "vectors": unit}),
     )
 
 
@@ -251,9 +128,7 @@ def band_stats_from_ann_store(
     saturation counts are the actionable part here."""
     from polars_text_spark.operators.dedup import band_bucket_stats
 
-    banded = _minus_tombstones(
-        _read_store(spark, name, "bands"), _tombstones(spark, name)
-    )
+    banded = ANN_STORE.open(spark, name).read("bands")
     return band_bucket_stats(banded, ["band_key"], band_cap=band_cap)
 
 
@@ -262,60 +137,26 @@ def rebucket_store(spark: SparkSession, name: str, new_buckets: int) -> None:
     lifecycle step :func:`write_ann_store` freezing ``buckets`` at
     write time makes necessary: a store that grows 100x through
     :func:`append_ann_shard` keeps its write-time bucket count, so
-    every co-located read and compaction task scales with
-    corpus/buckets. One rewrite shuffle per table (the compaction pass
-    it also is — append fragments merge for free), then the meta row
-    is updated so subsequent appends write at the new count.
+    every co-located read task scales with corpus/buckets. One rewrite
+    shuffle per table (append fragments merge for free), then the
+    meta row records the new count so later appends write at it.
 
     Signature parameters, contents, and pending tombstones are all
-    preserved: band keys don't depend on the bucket count, the
-    rewrite carries tombstoned rows through (reads keep anti-joining
-    the tombstone table until :func:`purge_deleted`), and the answer
-    to every query is bit-identical before and after (parity-tested;
-    ``ann_store_rebucket`` pins it under the driver hash).
+    preserved (band keys don't depend on the bucket count, and the
+    rewrite carries tombstoned rows until :func:`purge_deleted`), so
+    every query answers bit-identically before and after.
 
     Sizing guidance (SCALING.md): target ~store_rows/new_buckets rows
     per bucket task at the CURRENT corpus size times expected growth
     until the next maintenance window — re-bucketing is one shuffle,
     under-bucketing taxes every read until the next one.
 
-    Atomic since round 14 (VERDICT r13 #2): both tables are written as
-    a complete NEXT generation beside the live store, the meta row —
-    which every reader/appender resolves physical names through —
-    flips in ONE overwrite, and only then is the old generation
-    dropped. A crash at any point leaves the store fully on one
-    generation or the other (orphans/stale tables swept on the next
-    maintenance run); an append racing the rewrite aborts the rewrite
-    loudly (file-snapshot check) or raises on its own post-write
-    generation check, instead of silently writing at a stale bucket
-    count. See :func:`polars_text_spark.sources.bucketing.
-    rewrite_generation` for the failure-mode table."""
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"ann store '{name}' has no meta table; (re)create it "
-            "with write_ann_store"
-        )
-    d = m.asDict()
-    dim, num_planes, bands = (
-        int(d["dim"]), int(d["num_planes"]), int(d["bands"])
-    )
-    rewrite_generation(
-        spark,
-        name,
-        _SUFFIXES,
-        new_buckets=new_buckets,
-        gen=int(d["gen"]) if d.get("gen") is not None else 0,
-        write_meta=lambda gen: _write_meta(
-            spark,
-            name,
-            dim=dim,
-            num_planes=num_planes,
-            bands=bands,
-            buckets=new_buckets,
-            gen=gen,
-        ),
-    )
+    Atomic: the rewrite is a generational cutover (a complete next
+    generation beside the live store, one meta-row flip, then the old
+    generation dropped); an append racing it raises on at least one
+    side — see :meth:`polars_text_spark.sources.bucketing.Store.
+    cutover` for the failure-mode table."""
+    ANN_STORE.open(spark, name).rebucket(new_buckets)
 
 
 def delete_ids(ids: DataFrame, name: str, *, id_col: str = "vec_id") -> None:
@@ -323,8 +164,7 @@ def delete_ids(ids: DataFrame, name: str, *, id_col: str = "vec_id") -> None:
     purge) WITHOUT rewriting the store: append the ids to the
     ``<name>_tombstones`` table. Every read path anti-joins the
     tombstone set from then on; :func:`purge_deleted` later folds the
-    tombstones into the files (one compaction pass) instead of a
-    per-deletion store rewrite — O(batch) deletes, amortized O(store)
+    tombstones into the files — O(batch) deletes, amortized O(store)
     physical reclaim.
 
     Contract: a tombstoned id cannot be re-appended until
@@ -336,53 +176,21 @@ def delete_ids(ids: DataFrame, name: str, *, id_col: str = "vec_id") -> None:
 
 def purge_deleted(spark: SparkSession, name: str) -> None:
     """Fold the tombstone set into the store files: rewrite both
-    bucketed tables with the tombstones anti-joined away, then clear
-    the tombstone table. After this the store is byte-equivalent to
-    one rebuilt from the filtered corpus (parity-tested) and
-    re-appending previously-deleted ids becomes legal again. Atomic
-    via the generational protocol (round 14) — see
-    :func:`rebucket_store`; the tombstone clear happens AFTER the
-    cutover, so a crash between the two leaves reads correct (the
-    anti-join of already-purged ids is a no-op)."""
-    ts = _tombstones(spark, name)
-    if ts is None:
-        return
-    ts = ts.localCheckpoint(eager=True)  # survives the table drops below
-    m = read_meta(spark, name)
-    if m is None or m.asDict().get("buckets") is None:
-        # meta-less store (delete_ids never required meta — ADVICE
-        # r14) or pre-bucket-meta store: no complete meta row to flip
-        # — fall back to the in-place compaction swap (documented
-        # non-atomic; such stores predate incremental ingest anyway)
-        from polars_text_spark.sources.bucketing import compact_table
+    bucketed tables with the tombstones anti-joined away (one atomic
+    cutover, as :func:`rebucket_store`), then clear the tombstone
+    table. After this the store answers like one rebuilt from the
+    filtered corpus and re-appending previously-deleted ids is legal
+    again."""
+    ANN_STORE.open(spark, name).purge_deleted()
 
-        compact_table(spark, f"{name}_bands", anti=ts, anti_on="id")
-        compact_table(spark, f"{name}_vectors", anti=ts, anti_on="id")
-        clear_table(spark, f"{name}_tombstones")
-        return
-    d = m.asDict()
-    dim, num_planes, bands, buckets = (
-        int(d["dim"]), int(d["num_planes"]),
-        int(d["bands"]), int(d["buckets"]),
-    )
-    rewrite_generation(
-        spark,
-        name,
-        _SUFFIXES,
-        anti=ts,
-        anti_on="id",
-        gen=int(d["gen"]) if d.get("gen") is not None else 0,
-        write_meta=lambda gen: _write_meta(
-            spark,
-            name,
-            dim=dim,
-            num_planes=num_planes,
-            bands=bands,
-            buckets=buckets,
-            gen=gen,
-        ),
-    )
-    clear_table(spark, f"{name}_tombstones")
+
+def _append_rows(store, rows: DataFrame, id_col: str, vec_col: str) -> None:
+    """Append ``rows`` under the store's recorded signature: bands
+    first, vectors last — the vectors table decides id novelty, so a
+    crash between the two leaves only band rows, whose duplicate
+    collisions every read path drops."""
+    banded, unit = _projections(rows, id_col, vec_col, store.params)
+    store.append({"bands": banded, "vectors": unit})
 
 
 def append_ann_shard(
@@ -394,8 +202,7 @@ def append_ann_shard(
 ) -> None:
     """Incremental ingest: append a NEW shard's band keys and unit
     vectors into the standing store tables (the ANN twin of
-    :func:`polars_text_spark.operators.dedup_store.incremental_pairs_from_store`'s
-    write half).
+    :func:`polars_text_spark.operators.dedup_store.append_minhash_shard`).
 
     Signature parameters are read from the store meta — they CANNOT
     legitimately differ (a shard banded under different planes would
@@ -406,57 +213,16 @@ def append_ann_shard(
     read every bucket co-located with NO Exchange. Only the (small)
     shard shuffles — once, at write time, into its bucket files.
 
-    Contract: shard ids must be DISJOINT from store ids — enforced
-    with a limit-1 semi-join probe (the shard probes the id-bucketed
-    vector table, nothing store-sized is broadcast) before any
-    write, because a duplicated id would
+    Contract: shard ids must be DISJOINT from store ids and pending
+    tombstones — enforced with a limit-1 semi-join probe (the shard
+    probes the id-bucketed vector table, nothing store-sized is
+    broadcast) before any write, because a duplicated id would
     silently double its rows in both tables and burn top-k rank slots
     with duplicate candidates on every later query.
     """
-    spark = shard.sparkSession
-    dim, num_planes, bands, buckets, gen_at_start = _store_meta(spark, name)
-    # dimensionality is guarded IN-PLAN by sha_band_keys (round 16):
-    # the former pre-flight scan was a full extra pass over the shard
-    bands_tbl = phys_table(name, "bands", gen_at_start)
-    vectors_tbl = phys_table(name, "vectors", gen_at_start)
-    clash = probe_id_clash(
-        shard,
-        spark.table(vectors_tbl),
-        _tombstones(spark, name),
-        id_col=id_col,
-    )
-    if clash is not None:
-        raise ValueError(
-            f"shard id {clash!r} already exists in ann store "
-            f"'{name}'; appending would silently duplicate its rows in "
-            "the bands/vectors tables and corrupt later top-k results "
-            "(the incremental-ingest contract requires disjoint ids)"
-        )
-    banded, unit = _shard_projections(
-        shard,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        num_planes=num_planes,
-        bands=bands,
-    )
-    write_bucketed(
-        banded,
-        bands_tbl,
-        bucket_by="band_key",
-        buckets=buckets,
-        sort_by="band_key",
-        mode="append",
-    )
-    write_bucketed(
-        unit,
-        vectors_tbl,
-        bucket_by="id",
-        buckets=buckets,
-        sort_by="id",
-        mode="append",
-    )
-    _check_generation_unchanged(spark, name, gen_at_start)
+    store = ANN_STORE.open(shard.sparkSession, name)
+    store.assert_disjoint(shard, id_col)
+    _append_rows(store, shard, id_col, vec_col)
 
 
 def topk_against_shard(
@@ -488,30 +254,15 @@ def topk_against_shard(
     :func:`append_ann_shard`; after the append, :func:`topk_from_store`
     answers over the grown store directly.
     """
-    # read-only: works on pre-bucket-meta stores too
-    dim, num_planes, bands, _, __gen = _store_meta(
-        spark, name, require_buckets=False
-    )
-    # wrong-dim shards fail loudly inside sha_band_keys (in-plan
-    # guard, round 16) when the banding projection first runs
-    banded, unit = _shard_projections(
-        shard,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        num_planes=num_planes,
-        bands=bands,
-    )
+    store = ANN_STORE.open(spark, name)
+    banded, unit = _projections(shard, id_col, vec_col, store.params)
     q_bands = banded.select(F.col("id").alias("query_id"), "band_key")
     qunit = unit.select(
         F.col("id").alias("query_id"), F.col("u").alias("__qvec")
     )
-    __ts = _tombstones(spark, name)
-    # __gen came from the same meta read as the signature params —
-    # one collect resolves everything (round 16)
-    store_bands = _minus_tombstones(
-        spark.table(phys_table(name, "bands", __gen)), __ts
-    ).select(F.col("id").alias("neighbor_id"), "band_key")
+    store_bands = store.read("bands").select(
+        F.col("id").alias("neighbor_id"), "band_key"
+    )
     shard_bands = banded.select(
         F.col("id").alias("neighbor_id"), "band_key"
     )
@@ -531,7 +282,7 @@ def topk_against_shard(
     if exclude_self:
         cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
     neighbors = (
-        _minus_tombstones(spark.table(phys_table(name, "vectors", __gen)), __ts)
+        store.read("vectors")
         .unionByName(unit)
         .select(F.col("id").alias("neighbor_id"), F.col("u").alias("__vvec"))
     )
@@ -578,12 +329,8 @@ def topk_from_store(
     :func:`band_stats_from_ann_store` (detect) plus a rebuild at wider
     ``num_planes`` (re-provision) or :func:`rebucket_store` for read
     parallelism — see SCALING.md round-13."""
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"ann store '{name}' has no meta table; (re)create it "
-            "with write_ann_store"
-        )
+    store = ANN_STORE.open(spark, name)
+    m = store.params
     if (m["dim"], m["num_planes"], m["bands"]) != (dim, num_planes, bands):
         raise ValueError(
             f"ann store '{name}' was written with dim={m['dim']}, "
@@ -592,9 +339,6 @@ def topk_from_store(
             f"bands={bands}) would produce band keys that can never "
             "collide with the store"
         )
-    # generation from the SAME meta row — no second meta-log collect
-    __d = m.asDict()
-    __gen = int(__d["gen"]) if __d.get("gen") is not None else 0
     # wrong-dim queries fail loudly inside sha_band_keys (in-plan
     # guard, round 16) when the banding projection first runs
     base = queries.where(F.col(vec_col).isNotNull()).select(
@@ -611,10 +355,9 @@ def topk_from_store(
             )
         ).alias("band_key"),
     )
-    __ts = _tombstones(spark, name)
-    store_bands = _minus_tombstones(
-        spark.table(phys_table(name, "bands", __gen)), __ts
-    ).select(F.col("id").alias("neighbor_id"), "band_key")
+    store_bands = store.read("bands").select(
+        F.col("id").alias("neighbor_id"), "band_key"
+    )
     # Candidate dedup folded into the re-rank keying (round 17,
     # VERDICT r16 #6 + guide §2.3/§2.4): the candidate stream carries
     # ONLY (query_id, neighbor_id) — the query vector no longer rides
@@ -626,20 +369,17 @@ def topk_from_store(
     # (query_id, neighbor_id) and re-exchanging on neighbor_id. The
     # query vectors re-attach AFTER the dedup via the (small by
     # contract) query-side join.
-    cands = store_bands.join(q_bands, "band_key").select(
-        "query_id", "neighbor_id"
+    cands = (
+        store_bands.join(q_bands, "band_key")
+        .select("query_id", "neighbor_id")
+        .repartition(m["buckets"], F.col("neighbor_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
     )
-    __buckets = __d.get("buckets")
-    if __buckets:
-        cands = cands.repartition(int(__buckets), F.col("neighbor_id"))
-    else:
-        cands = cands.repartition(F.col("neighbor_id"))
-    cands = cands.dropDuplicates(["query_id", "neighbor_id"])
     if exclude_self:
         cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    unit = _minus_tombstones(
-        spark.table(phys_table(name, "vectors", __gen)), __ts
-    ).select(F.col("id").alias("neighbor_id"), F.col("u").alias("__vvec"))
+    unit = store.read("vectors").select(
+        F.col("id").alias("neighbor_id"), F.col("u").alias("__vvec")
+    )
     scored = (
         cands.join(unit, "neighbor_id")
         .join(qunit, "query_id")

@@ -56,6 +56,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from polars_text_spark.plans.exprs import let
+from polars_text_spark.sources.bucketing import StoreSpec
 
 __all__ = [
     "append_bloom_shard",
@@ -283,6 +284,15 @@ def bloom_semi_join(
     )
 
 
+BLOOM_STORE = StoreSpec(
+    kind="bloom",
+    writer="write_bloom_store",
+    tables=(("words", None),),
+    meta="m_bits bigint, n_hashes int, seed bigint",
+    tombstones=False,
+)
+
+
 def write_bloom_store(
     df: DataFrame,
     col: str,
@@ -298,68 +308,34 @@ def write_bloom_store(
     per new batch, ``read_bloom_store`` to probe.
 
     Layout: ``<name>_words(word, bits)`` (sparse set words — at most
-    ``m_bits/64`` rows per generation) + ``<name>_meta``. Parameters
-    ride with the store (the ann/dedup-store meta pattern): a shard
-    hashed under different (m, k, seed) would silently never collide,
-    so appends read them back instead of trusting the caller.
+    ``m_bits/64`` rows per write or append, unbucketed) + the
+    ``<name>_meta`` pointer, through the store core's spec
+    :data:`BLOOM_STORE`. Parameters ride with the store (the
+    ann/dedup-store meta pattern): a shard hashed under different
+    (m, k, seed) would silently never collide, so appends read them
+    back instead of trusting the caller.
 
     Unlike the MinHash/ANN stores there is no tombstone path — a
     Bloom filter cannot unset a bit (that is the price of 10
-    bits/key); deletion means re-writing the store from the filtered
-    authority set — :func:`rebuild_bloom_store`, which since round 15
-    rides the same generational cutover as the MinHash/ANN stores (a
-    plain overwrite let a concurrent ``stream_into_bloom_store``
-    trigger OR bits into the doomed table and lose them silently —
-    VERDICT r14 #5). No compaction either: appends add at most
-    ``m_bits/64`` rows each and the read-time ``bit_or`` merge keeps
-    the probe exact, so the table stays trivially small relative to
-    any corpus."""
-    from polars_text_spark.sources.bucketing import (
-        clear_table,
-        sweep_stale_generations,
-        write_meta_row,
-    )
-
-    spark = df.sparkSession
-    # a fresh write starts a NEW store: drop EVERY physical generation
-    # a previous store of this name left behind (gen -1 matches none);
-    # clear_table additionally removes a stale warehouse DIRECTORY a
-    # previous SESSION's drop left behind, which the catalog sweep
-    # cannot see and which would block the saveAsTable
-    sweep_stale_generations(spark, name, ("words",), -1)
+    bits/key); deletion means re-deriving the store from the filtered
+    authority set — :func:`rebuild_bloom_store`, on the same
+    generational cutover as the MinHash/ANN stores. No compaction
+    either: appends add at most ``m_bits/64`` rows each and the
+    read-time ``bit_or`` merge keeps the probe exact, so the table
+    stays trivially small relative to any corpus."""
     words = _word_frame(df, col, m_bits, n_hashes, seed)
-    clear_table(spark, f"{name}_words")
-    words.write.format("parquet").mode("overwrite").saveAsTable(
-        f"{name}_words"
+    BLOOM_STORE.create(
+        df.sparkSession, name,
+        {"m_bits": m_bits, "n_hashes": n_hashes, "seed": seed},
+        lambda store: store.write_table("words", words),
     )
-    meta = spark.createDataFrame(
-        [(int(m_bits), int(n_hashes), int(seed), 0)],
-        "m_bits bigint, n_hashes int, seed bigint, gen int",
+
+
+def _append(store, df: DataFrame, col: str) -> None:
+    p = store.params
+    store.append(
+        {"words": _word_frame(df, col, p["m_bits"], p["n_hashes"], p["seed"])}
     )
-    write_meta_row(spark, meta, f"{name}_meta", reset=True)
-
-
-def _bloom_meta(spark, name: str) -> tuple[int, int, int, int]:
-    """(m_bits, n_hashes, seed, generation) from the store meta —
-    resolved through the max-gen row (metas predating the ``gen``
-    column read as generation 0)."""
-    from polars_text_spark.sources.bucketing import read_meta
-
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"bloom store '{name}' has no meta table; (re)create it "
-            "with write_bloom_store"
-        )
-    d = m.asDict()
-    gen = int(d["gen"]) if d.get("gen") is not None else 0
-    return int(m["m_bits"]), int(m["n_hashes"]), int(m["seed"]), gen
-
-
-def _words_table(name: str, gen: int) -> str:
-    from polars_text_spark.sources.bucketing import phys_table
-
-    return phys_table(name, "words", gen)
 
 
 def append_bloom_shard(df: DataFrame, col: str, name: str) -> None:
@@ -370,30 +346,11 @@ def append_bloom_shard(df: DataFrame, col: str, name: str) -> None:
     The one unsafe interleaving is a :func:`rebuild_bloom_store`
     cutover racing the append (the appended bits would ride the
     dropped generation): the append re-reads the generation after its
-    write and raises conservatively, and re-running it is always safe
-    (re-ORing bits is idempotent in both worlds).
-
-    Race coverage (round 16): an append that starts AND completes
-    entirely inside the sub-second gap between the rebuild's final
-    file re-list and its meta flip passes both this check and the
-    rebuild's snapshot check — the rebuild's POST-flip audit
-    (:func:`polars_text_spark.sources.bucketing.postflip_append_audit`)
-    then sees its files under the old generation and raises with the
-    old generation preserved, so every interleaving is loud on at
-    least one side. Re-running a raced append is always safe
-    (re-ORing bits is idempotent in both worlds); a writer-free
-    rebuild window stays the operationally clean choice."""
-    from polars_text_spark.sources.bucketing import (
-        check_generation_unchanged,
-    )
-
-    spark = df.sparkSession
-    m_bits, n_hashes, seed, gen_at_start = _bloom_meta(spark, name)
-    words = _word_frame(df, col, m_bits, n_hashes, seed)
-    words.write.format("parquet").mode("append").saveAsTable(
-        _words_table(name, gen_at_start)
-    )
-    check_generation_unchanged(spark, name, gen_at_start)
+    write and raises conservatively, the rebuild's pre-flip re-list
+    and post-flip audit catch the other interleavings, and re-running
+    a raced append is always safe (re-ORing bits is idempotent in both
+    worlds)."""
+    _append(BLOOM_STORE.open(df.sparkSession, name), df, col)
 
 
 def read_bloom_store(spark, name: str) -> DataFrame:
@@ -402,13 +359,12 @@ def read_bloom_store(spark, name: str) -> DataFrame:
     base write plus every shard appended to it at read time (old
     generations are dropped at rebuild cutover, so the current
     words table is the whole store)."""
-    m_bits, n_hashes, seed, gen = _bloom_meta(spark, name)
+    store = BLOOM_STORE.open(spark, name)
+    p = store.params
     merged = (
-        spark.table(_words_table(name, gen))
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
+        store.read("words").groupBy("word").agg(F.bit_or("bits").alias("bits"))
     )
-    return _assemble(spark, merged, m_bits, n_hashes, seed)
+    return _assemble(spark, merged, p["m_bits"], p["n_hashes"], p["seed"])
 
 
 def rebuild_bloom_store(
@@ -423,29 +379,19 @@ def rebuild_bloom_store(
 ) -> None:
     """Re-derive the store from its AUTHORITY key set — the deletion
     verb a Bloom filter's no-unset physics forces (docstring of
-    :func:`write_bloom_store`), now on the generational cutover
-    protocol (VERDICT r14 #5): the new word set is written as
-    ``<name>_words_g<gen+1>`` beside the live table, the live table's
-    file set is re-listed against a start-of-rebuild snapshot — a
-    :func:`stream_into_bloom_store` trigger or ``append_bloom_shard``
-    that OR'd bits in during the rebuild aborts it LOUDLY instead of
-    losing those keys at the flip — then the meta row flips in one
-    append and the old generation is dropped. Readers see the old
-    filter or the new one, never a missing or half-written word set.
-
-    Race coverage (round 16 — the formerly-documented residual window
-    is CLOSED by detection): an append that starts and completes
-    entirely between this function's final file re-list and its meta
-    flip is visible to neither of the checks above — so a POST-flip
-    audit re-lists the old generation's files once more after the
-    cutover commits and raises if any appeared, with the old
-    generation preserved for recovery
-    (:func:`polars_text_spark.sources.bucketing.postflip_append_audit`).
-    Every interleaving now raises on at least one side; the post-flip
-    raise means the new generation is live WITHOUT the raced keys, so
-    re-run those appends (idempotent re-OR). Pausing streaming
-    triggers and shard appends for the rebuild remains the
-    operationally clean choice.
+    :func:`write_bloom_store`) — as one generational cutover: the new
+    word set is written as ``<name>_words_g<gen+1>`` beside the live
+    table, a :func:`stream_into_bloom_store` trigger or
+    ``append_bloom_shard`` that OR'd bits in meanwhile aborts the
+    rebuild LOUDLY (pre-flip file re-list) instead of losing those
+    keys at the flip, the meta row flips in one append, a post-flip
+    audit catches an append that landed inside the re-list -> flip gap
+    (the new generation is then live WITHOUT the raced keys: re-run
+    those appends, an idempotent re-OR), and the old generation is
+    dropped. Readers see the old filter or the new one, never a
+    missing or half-written word set; pausing streaming triggers and
+    shard appends for the rebuild remains the operationally clean
+    choice.
 
     Parameters default to the store's recorded ones; pass new values
     to resize while rebuilding (the one chance to grow ``m_bits``,
@@ -453,53 +399,14 @@ def rebuild_bloom_store(
     ``authority`` must include every key appended up to the rebuild's
     start — keys appended DURING the rebuild are what the snapshot
     check catches."""
-    from polars_text_spark.sources.bucketing import (
-        _list_files,
-        clear_table,
-        snapshot_files,
-        sweep_stale_generations,
-        write_meta_row,
+    store = BLOOM_STORE.open(spark, name)
+    given = {"m_bits": m_bits, "n_hashes": n_hashes, "seed": seed}
+    p = {k: store.params[k] if v is None else int(v) for k, v in given.items()}
+    store.cutover(
+        lambda nxt, _snapshot: nxt.write_table(
+            "words",
+            _word_frame(authority, col, p["m_bits"], p["n_hashes"], p["seed"]),
+        ),
+        params=p,
+        verb="rebuild",
     )
-
-    old_m, old_k, old_seed, gen = _bloom_meta(spark, name)
-    m_bits = int(m_bits) if m_bits is not None else old_m
-    n_hashes = int(n_hashes) if n_hashes is not None else old_k
-    seed = int(seed) if seed is not None else old_seed
-    sweep_stale_generations(spark, name, ("words",), gen)
-    nxt = gen + 1
-    live = _words_table(name, gen)
-    loc, schema, before = snapshot_files(spark, live)
-    dst = _words_table(name, nxt)
-    # clear_table also removes a stale warehouse DIRECTORY a previous
-    # session left behind (invisible to the catalog sweep), which
-    # would otherwise block the saveAsTable with LOCATION_ALREADY_EXISTS
-    clear_table(spark, dst)
-    try:
-        _word_frame(authority, col, m_bits, n_hashes, seed).write.format(
-            "parquet"
-        ).mode("overwrite").saveAsTable(dst)
-        if _list_files(spark, loc, schema) != before:
-            raise RuntimeError(
-                f"bloom store '{name}': the live word table changed "
-                "under the rebuild — a streaming trigger or shard "
-                "append OR'd bits in during the window, and the flip "
-                "would silently lose those keys. The store is "
-                "untouched; re-run the rebuild with an authority set "
-                "that includes them, in a writer-free window"
-            )
-    except BaseException:
-        clear_table(spark, dst)
-        raise
-    meta = spark.createDataFrame(
-        [(int(m_bits), int(n_hashes), int(seed), int(nxt))],
-        "m_bits bigint, n_hashes int, seed bigint, gen int",
-    )
-    write_meta_row(spark, meta, f"{name}_meta")  # THE atomic cutover
-    # post-flip audit (round 16): an append/trigger that OR'd bits in
-    # entirely between the re-list above and the meta flip evaded
-    # both checks — catch it here, preserving the old generation
-    # (see bucketing.postflip_append_audit for the recovery contract)
-    from polars_text_spark.sources.bucketing import postflip_append_audit
-
-    postflip_append_audit(spark, name, [(live, loc, schema, before)], nxt)
-    clear_table(spark, live)

@@ -112,19 +112,21 @@ def connected_components(
     labels = labels.localCheckpoint(eager=False)
     sym = sym.localCheckpoint(eager=False)
 
-    # The cheap sum probe is only SOUND for integral/decimal vertex
-    # ids (ADVICE r16): casting string ids to decimal yields nulls
-    # under ANSI-off (the all-null sums then compare equal and the
-    # loop exits half-merged) or raises under ANSI-on, and for
-    # numeric STRINGS min() is lexicographic, so the sum is not
-    # monotone. Non-numeric ids fall back to the exact changed-count
-    # probe (one extra self-join per round — the pre-round-16 shape).
+    # The cheap sum probe is only SOUND for integral vertex ids
+    # (integer types and scale-0 decimals): casting string ids to
+    # decimal yields nulls under ANSI-off (the all-null sums then
+    # compare equal and the loop exits half-merged) or raises under
+    # ANSI-on; for numeric STRINGS min() is lexicographic, so the sum
+    # is not monotone; and a fractional decimal label rounds in the
+    # decimal(38,0) cast, so a decrease finer than 1 (1.4 -> 1.2)
+    # leaves the sum unchanged. All of these fall back to the exact
+    # changed-count probe (one extra self-join per round).
     from pyspark.sql import types as T
 
     _vt = labels.schema["vertex"].dataType
     _sum_probe = isinstance(
-        _vt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType)
-    )
+        _vt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ) or (isinstance(_vt, T.DecimalType) and _vt.scale == 0)
 
     def _label_sum(frame: DataFrame):
         # Convergence probe: labels only ever move DOWN (both steps

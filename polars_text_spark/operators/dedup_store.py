@@ -19,16 +19,15 @@ the corpus does. This module persists them ONCE as bucketed tables
   table bucketed by doc id — again shuffle-free on the corpus side.
 
 Store layout (two bucketed catalog tables + the meta pointer):
-``<name>_bands(id, band int, bucket long[, sig])`` bucketed+sorted by
-``(band, bucket)``; ``<name>_shingles(id, sh array<long>)``
-bucketed+sorted by ``id``. Signature parameters are embedded at write
-time; pass the same ones when pairing a new shard. Since round 14 the
-PHYSICAL table names are generational (``<name>_bands_g1`` after the
-first maintenance rewrite) and ``<name>_meta`` is the atomic pointer:
-resolve through :func:`_phys` (or ``sources.bucketing.phys_table`` +
-``store_generation``) instead of hardcoding names — the unsuffixed
-names are only guaranteed for a store that has never had
-rebucket/purge run.
+``<name>_bands(id, band int, bucket long, sig long)`` bucketed+sorted
+by ``(band, bucket)``; ``<name>_shingles(id, sh array<long>)``
+bucketed+sorted by ``id``. Signature parameters and the shingle hash
+family are embedded at write time; pass the same parameters when
+pairing a new shard. The PHYSICAL table names are generational
+(``<name>_bands_g1`` after the first maintenance cutover) and
+``<name>_meta`` is the atomic pointer: every path opens the store
+through :data:`MINHASH_STORE`, the store core's spec of this layout
+(:class:`polars_text_spark.sources.bucketing.StoreSpec`).
 """
 
 from __future__ import annotations
@@ -37,26 +36,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polars_text_spark.operators.dedup import (
+    SHINGLE_HASH_VERSION,
     _banded_signatures,
     _guarded_cross_candidates,
     _guarded_self_pairs,
     _verify_jaccard,
     token_shingles,
 )
-from polars_text_spark.sources.bucketing import (
-    check_generation_unchanged as _check_generation_unchanged,
-    minus_tombstones as _minus_tombstones,
-    phys_table,
-    probe_id_clash,
-    read_meta,
-    read_tombstones as _tombstones,
-    rewrite_generation,
-    store_generation,
-    sweep_stale_generations,
-    tombstone_ids,
-    write_bucketed,
-    write_meta_row,
-)
+from polars_text_spark.sources.bucketing import StoreSpec, tombstone_ids
 
 __all__ = [
     "append_minhash_shard",
@@ -70,48 +57,55 @@ __all__ = [
     "write_minhash_store",
 ]
 
-_SUFFIXES = ("bands", "shingles")
+# hashv records the shingle hash FAMILY (dedup.SHINGLE_HASH_VERSION):
+# band keys of a different family never collide, with no caller
+# parameter to mismatch — see _assert_hash_family
+MINHASH_STORE = StoreSpec(
+    kind="minhash",
+    writer="write_minhash_store",
+    tables=(("bands", ("band", "bucket")), ("shingles", ("id",))),
+    meta="num_perm int, bands int, shingle_n int, buckets int, hashv int",
+)
 
 
-def _phys(spark: SparkSession, name: str, suffix: str) -> str:
-    """Current physical catalog name of a store table, resolved
-    through the meta generation pointer (round 14: maintenance writes
-    a complete next generation and flips the meta row atomically, so
-    every read/append resolves HERE instead of hardcoding names)."""
-    return phys_table(name, suffix, store_generation(spark, name))
-
-
-def _read_store(spark: SparkSession, name: str, suffix: str) -> DataFrame:
-    return spark.table(_phys(spark, name, suffix))
-
-
-def _write_meta(
-    spark: SparkSession,
-    name: str,
-    *,
-    num_perm: int,
-    bands: int,
-    shingle_n: int,
-    buckets: int,
-    hashv: int,
-    gen: int,
-    reset: bool = False,
-) -> None:
-    meta = spark.createDataFrame(
-        [(
-            int(num_perm),
-            int(bands),
-            int(shingle_n),
-            int(buckets),
-            int(hashv),
-            int(gen),
-        )],
-        "num_perm int, bands int, shingle_n int, buckets int, "
-        "hashv int, gen int",
+def _shingle_rows(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int
+) -> DataFrame:
+    return df.select(
+        F.col(id_col).alias("id"),
+        token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
     )
-    # reset=True starts a fresh meta log (generation 0); cutovers
-    # APPEND the next-gen row — the atomic flip (see write_meta_row)
-    write_meta_row(spark, meta, f"{name}_meta", reset=reset)
+
+
+def _band_rows(shingles: DataFrame, params: dict) -> DataFrame:
+    """``(id, band, bucket, sig)`` rows from an ``(id, sh)`` frame.
+    ``sig`` is the full-signature key the hot-band guard stars
+    saturated buckets by (see dedup._guarded_self_pairs)."""
+    return _banded_signatures(
+        shingles, "sh", "id", "id",
+        num_perm=params["num_perm"], bands=params["bands"],
+        shingle_n=params["shingle_n"], shingles_col="sh",
+    ).select(
+        "id",
+        F.col("bk.band").alias("band"),
+        F.col("bk.bucket").alias("bucket"),
+        F.col("__sig").alias("sig"),
+    )
+
+
+def _derive(store, shingles: DataFrame) -> None:
+    """Write both tables of ``store``'s generation from ONE tokenize
+    pass: the shingle table is written first and the band signatures
+    are derived from READING IT BACK — a columnar scan of hashed
+    shingle longs, and since the table is bucketed by id, the minhash
+    groupBy(id) runs with no Exchange. (Write order inside a fresh or
+    next generation carries no crash contract: nothing resolves it
+    before the meta row.)"""
+    store.write_table("shingles", shingles)
+    store.write_table(
+        "bands",
+        _band_rows(store.spark.table(store.table("shingles")), store.params),
+    )
 
 
 def write_minhash_store(
@@ -126,142 +120,61 @@ def write_minhash_store(
     buckets: int = 8,
 ) -> None:
     """Materialize ``<name>_shingles`` and ``<name>_bands`` bucketed
-    tables for ``df``. ONE pass over the text (round 15): the shingle
-    table is written first, then the band signatures are derived from
-    READING IT BACK — a columnar scan of hashed-shingle longs instead
-    of a second tokenize pass over the corpus, and since the table is
-    bucketed by id, the minhash groupBy(id) aggregation runs with no
-    Exchange. A fresh write is generation 0 (unsuffixed physical
-    names); any physical tables a previous store of the same name left
-    behind — including suffixed maintenance generations — are swept
-    first."""
-    spark = df.sparkSession
-    from polars_text_spark.sources.bucketing import clear_table
-
-    # a rebuild starts a NEW store: sweep EVERY physical generation of
-    # the old one (current_gen=-1 matches no table, so all are
-    # dropped), then write fresh at generation 0
-    sweep_stale_generations(spark, name, _SUFFIXES, -1)
-    shingles = df.select(
-        F.col(id_col).alias("id"),
-        token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
-    )
-    write_bucketed(
-        shingles,
-        f"{name}_shingles",
-        bucket_by="id",
-        buckets=buckets,
-        sort_by="id",
-    )
-    banded = _banded_signatures(
-        spark.table(f"{name}_shingles"), text_col, "id", "id",
-        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-        shingles_col="sh",
-    ).select(
-        "id",
-        F.col("bk.band").alias("band"),
-        F.col("bk.bucket").alias("bucket"),
-        # full-signature key: the hot-band guard stars saturated
-        # buckets per signature group (see dedup._guarded_self_pairs)
-        F.col("__sig").alias("sig"),
-    )
-    write_bucketed(
-        banded,
-        f"{name}_bands",
-        bucket_by=["band", "bucket"],
-        buckets=buckets,
-        sort_by=["band", "bucket"],
-    )
-    # a rebuild starts a NEW store generation: tombstones from the
-    # previous generation would silently delete rows from the fresh
-    # store at read time and block re-appending their ids
-    clear_table(spark, f"{name}_tombstones")
-    # signature parameters ride with the store (the ann_store meta
-    # pattern): a shard banded under different permutations/shingles
-    # would NEVER collide with standing keys, so append reads them
-    # back instead of trusting the caller. hashv records the shingle
-    # hash FAMILY (dedup.SHINGLE_HASH_VERSION) — the same
-    # never-collide failure with no parameter to mismatch.
-    from polars_text_spark.operators.dedup import SHINGLE_HASH_VERSION
-
-    _write_meta(
-        spark,
-        name,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
-        buckets=buckets,
-        hashv=SHINGLE_HASH_VERSION,
-        gen=0,
-        reset=True,  # a fresh store starts a new meta log
+    tables for ``df`` with ONE pass over the text, as a fresh
+    generation-0 store replacing any previous store of the same name
+    and its tombstones. The signature parameters, bucket count and
+    shingle hash family ride in the meta row, so appends read them
+    back instead of trusting the caller (a shard banded under
+    different permutations would NEVER collide with standing keys)."""
+    params = {
+        "num_perm": num_perm, "bands": bands, "shingle_n": shingle_n,
+        "buckets": buckets, "hashv": SHINGLE_HASH_VERSION,
+    }
+    shingles = _shingle_rows(df, text_col, id_col, shingle_n)
+    MINHASH_STORE.create(
+        df.sparkSession, name, params, lambda store: _derive(store, shingles)
     )
 
 
-def _minhash_meta(
-    spark: SparkSession, name: str
-) -> tuple[int, int, int, int, int] | None:
-    """(num_perm, bands, shingle_n, buckets, gen) recorded at write
-    time, or None for a store written before the meta table existed.
-    One meta-log collect resolves params AND the generation (round 16
-    — the streaming ingest paid a second collect per trigger)."""
-    m = read_meta(spark, name)
-    if m is None:
-        return None
-    d = m.asDict()
-    return (
-        int(m["num_perm"]),
-        int(m["bands"]),
-        int(m["shingle_n"]),
-        int(m["buckets"]),
-        int(d["gen"]) if d.get("gen") is not None else 0,
-    )
-
-
-def _assert_hash_family(spark: SparkSession, name: str, meta_row=None) -> None:
+def _assert_hash_family(name: str, params: dict) -> None:
     """Refuse to band NEW text against a store written under a
     different shingle hash FAMILY: the new rows' band keys could
     never collide with the standing rows — the silent-recall-0
     failure the meta table exists to prevent, with no caller
-    parameter to mismatch. Raised (not warned) on the append and
+    parameter to mismatch. Raised on the append, streaming-ingest and
     incremental-pair paths; self-contained reads
     (:func:`pairs_from_store`, :func:`band_stats_from_store`,
-    :func:`rebucket_minhash_store`) stay valid on any version.
-
-    A store whose ``<name>_bands`` table exists but whose meta table
-    does NOT is treated as hash family v1 (ADVICE r13): every pre-meta
-    store was written under the v1 string-shingle family, so returning
-    silently here would band v2-hashed text against v1 buckets — the
-    exact silent-recall-0 failure this guard exists to prevent. Only
-    when NEITHER table exists (the store genuinely doesn't exist yet)
-    is the check a no-op, leaving the missing-store error to the
-    caller's own read. ``meta_row`` lets a caller that already read
-    the meta row skip the re-read (one collect per append saved)."""
-    from polars_text_spark.operators.dedup import SHINGLE_HASH_VERSION
-
-    m = meta_row if meta_row is not None else read_meta(spark, name)
-    if m is None:
-        if spark.catalog.tableExists(f"{name}_bands"):
-            raise ValueError(
-                f"minhash store '{name}' has band/shingle tables but "
-                "no meta table: it predates the meta protocol and was "
-                "therefore written under shingle hash family v1, whose "
-                "band keys can never collide with this build's v"
-                f"{SHINGLE_HASH_VERSION} shingles (silent recall 0). "
-                "Rebuild it with write_minhash_store (or "
-                "rebuild_minhash_store) before banding new text "
-                "against it"
-            )
-        return
-    stored = int(m["hashv"]) if "hashv" in m.asDict() else 1
-    if stored != SHINGLE_HASH_VERSION:
+    :func:`rebucket_minhash_store`) stay valid on any version, and
+    :func:`rebuild_minhash_store` migrates the store."""
+    if params["hashv"] != SHINGLE_HASH_VERSION:
         raise ValueError(
             f"minhash store '{name}' was written under shingle hash "
-            f"family v{stored}; this build derives v"
+            f"family v{params['hashv']}; this build derives v"
             f"{SHINGLE_HASH_VERSION} shingles, whose band keys can "
             "never collide with the standing rows (silent recall 0). "
-            "Rebuild the store with write_minhash_store before "
-            "banding new text against it"
+            "Rebuild the store with rebuild_minhash_store (or "
+            "write_minhash_store) before banding new text against it"
         )
+
+
+def _append_rows(store, shard: DataFrame, text_col: str, id_col: str) -> None:
+    """Append ``shard`` under the store's recorded parameters with ONE
+    tokenize pass: the staged ``(id, sh)`` frame is pinned and feeds
+    both tables (shards are the small side by contract, so the pin is
+    bounded). The store core appends BANDS FIRST: the shingles table
+    decides id novelty and clashes, so a crash between the two writes
+    leaves band rows whose retry re-appends cleanly (candidate pairs
+    dedup) — the reverse order would leave shingle rows whose band
+    keys never landed, refusing the retry (silent recall loss)."""
+    from polars_text_spark.persist import track_persist
+
+    staged = track_persist(
+        _shingle_rows(
+            shard, text_col, id_col, store.params["shingle_n"]
+        ).persist()
+    )
+    store.append({"bands": _band_rows(staged, store.params), "shingles": staged})
+    staged.unpersist()
 
 
 def append_minhash_shard(
@@ -277,10 +190,9 @@ def append_minhash_shard(
     append its band + shingle rows as new bucket files. Standing files
     are never rewritten — ingest writes O(shard) data (the
     disjointness probe does read the store's id column, shuffle-free,
-    to prove no clash). After the append, :func:`pairs_from_store` answers over the
-    grown corpus; compact with
-    :func:`polars_text_spark.sources.bucketing.compact_table` once
-    append fragments accumulate.
+    to prove no clash). After the append, :func:`pairs_from_store`
+    answers over the grown corpus; :func:`rebucket_minhash_store`
+    merges the append fragments once they accumulate.
 
     Contract: shard ids must be DISJOINT from store ids AND from any
     pending tombstones (enforced with a semi-join probe — the shard
@@ -288,105 +200,10 @@ def append_minhash_shard(
     — a duplicate id would double its rows in both tables, and
     a tombstoned id would be silently swallowed by the read-time
     anti-join until purge."""
-    spark = shard.sparkSession
-    m = read_meta(spark, name)  # ONE meta read: params + hashv + gen
-    if m is None:
-        raise ValueError(
-            f"minhash store '{name}' predates incremental ingest (no "
-            "meta table); rewrite it with write_minhash_store before "
-            "appending shards"
-        )
-    d = m.asDict()
-    num_perm, bands, shingle_n, buckets = (
-        int(d["num_perm"]), int(d["bands"]),
-        int(d["shingle_n"]), int(d["buckets"]),
-    )
-    _assert_hash_family(spark, name, meta_row=m)
-    gen_at_start = int(d["gen"]) if d.get("gen") is not None else 0
-    bands_tbl = phys_table(name, "bands", gen_at_start)
-    shingles_tbl = phys_table(name, "shingles", gen_at_start)
-    clash = probe_id_clash(
-        shard,
-        spark.table(shingles_tbl),
-        _tombstones(spark, name),
-        id_col=id_col,
-    )
-    if clash is not None:
-        raise ValueError(
-            f"shard id {clash!r} already exists in minhash "
-            f"store '{name}' (or is tombstoned awaiting purge); "
-            "appending would duplicate its rows and corrupt later "
-            "pair results"
-        )
-    # ONE tokenize pass over the shard (round 15): the staged
-    # (id, shingles) frame is pinned and feeds BOTH table appends —
-    # shards are the small side by contract, so the pin is bounded.
-    # Write order stays BANDS FIRST (the crash-recovery contract: a
-    # bands-only orphan re-appends cleanly because the id-clash probe
-    # reads the shingles table and candidate pairs dedup; flipping the
-    # order would make a crashed append refuse retry with shingle rows
-    # whose band keys never landed — silent recall loss).
-    from polars_text_spark.persist import track_persist
-
-    staged = track_persist(
-        shard.select(
-            F.col(id_col).alias("id"),
-            token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
-        ).persist()
-    )
-    shard_cols = ["id", F.col("bk.band").alias("band"),
-                  F.col("bk.bucket").alias("bucket")]
-    if "sig" in spark.table(bands_tbl).columns:
-        shard_cols.append(F.col("__sig").alias("sig"))
-    banded = _banded_signatures(
-        staged, text_col, "id", "id",
-        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-        shingles_col="sh",
-    ).select(*shard_cols)
-    write_bucketed(
-        banded,
-        bands_tbl,
-        bucket_by=["band", "bucket"],
-        buckets=buckets,
-        sort_by=["band", "bucket"],
-        mode="append",
-    )
-    write_bucketed(
-        staged,
-        shingles_tbl,
-        bucket_by="id",
-        buckets=buckets,
-        sort_by="id",
-        mode="append",
-    )
-    staged.unpersist()
-    _check_generation_unchanged(spark, name, gen_at_start)
-
-
-def _warn_if_legacy_sig_less(
-    name: str, star_by: tuple[str, ...], band_cap: int | None
-) -> None:
-    """Stores written before the ``sig`` column existed can only star
-    a saturated bucket against one ARBITRARY hub — those edges mostly
-    fail Jaccard verification (the hub is not signature-identical to
-    the members), so whole saturated families can silently lose their
-    pairs: a much larger recall loss than the signature-grouped path.
-    Warn loudly (ADVICE r12) so the caller either rewrites the store
-    with :func:`write_minhash_store` (which records ``sig``) or passes
-    ``band_cap=None`` to keep the exact clique semantics."""
-    if band_cap is not None and not star_by:
-        import warnings
-
-        warnings.warn(
-            f"minhash store '{name}' predates the signature column: "
-            "the hot-band guard (band_cap is set) will star saturated "
-            "buckets against one arbitrary hub, whose edges mostly "
-            "fail Jaccard verification — saturated families can lose "
-            "ALL their pairs. Rewrite the store with "
-            "write_minhash_store to record signatures, or pass "
-            "band_cap=None for exact (unguarded) semantics",
-            stacklevel=3,
-        )
+    store = MINHASH_STORE.open(shard.sparkSession, name)
+    _assert_hash_family(name, store.params)
+    store.assert_disjoint(shard, id_col)
+    _append_rows(store, shard, text_col, id_col)
 
 
 def rebucket_minhash_store(
@@ -398,53 +215,12 @@ def rebucket_minhash_store(
     (same rationale and sizing guidance: the bucket count frozen at
     write time makes a 100x-grown store read corpus/buckets rows per
     co-located task until this one rewrite shuffle per table).
-    Signature parameters, contents, and pending tombstones are
-    preserved; :func:`pairs_from_store` answers are identical before
-    and after (parity-tested).
-
-    Atomic since round 14 (VERDICT r13 #2): both tables are written
-    as a complete NEXT generation beside the live store, the meta row
-    — which every reader/appender resolves physical names through —
-    flips in ONE overwrite, and only then is the old generation
-    dropped. A crash at any point leaves the store fully on one
-    generation or the other (orphans/stale tables are swept on the
-    next maintenance run); an append racing the rewrite aborts the
-    rewrite loudly instead of silently corrupting co-location. See
-    :func:`polars_text_spark.sources.bucketing.rewrite_generation`
-    for the full failure-mode table."""
-    old = read_meta(spark, name)
-    if old is None:
-        raise ValueError(
-            f"minhash store '{name}' predates the meta table; rewrite "
-            "it with write_minhash_store (which also records the "
-            "bucket count) instead of re-bucketing in place"
-        )
-    d = old.asDict()
-    num_perm, bands, shingle_n = (
-        int(d["num_perm"]), int(d["bands"]), int(d["shingle_n"])
-    )
-    # preserve the recorded shingle hash FAMILY — re-bucketing moves
-    # rows, it does not re-derive them, so stamping the current
-    # version onto an older store would let appends corrupt it
-    hashv = int(d["hashv"]) if d.get("hashv") is not None else 1
-
-    rewrite_generation(
-        spark,
-        name,
-        _SUFFIXES,
-        new_buckets=new_buckets,
-        gen=int(d["gen"]) if d.get("gen") is not None else 0,
-        write_meta=lambda gen: _write_meta(
-            spark,
-            name,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_n=shingle_n,
-            buckets=new_buckets,
-            hashv=hashv,
-            gen=gen,
-        ),
-    )
+    Signature parameters, the recorded hash family (rows are moved,
+    not re-derived), contents and pending tombstones are preserved;
+    :func:`pairs_from_store` answers are identical before and after.
+    Atomic: one generational cutover (see
+    :meth:`polars_text_spark.sources.bucketing.Store.cutover`)."""
+    MINHASH_STORE.open(spark, name).rebucket(new_buckets)
 
 
 def rebuild_minhash_store(
@@ -456,8 +232,8 @@ def rebuild_minhash_store(
     id_col: str = "doc_id",
 ) -> None:
     """Migrate a standing store to the CURRENT shingle hash family by
-    re-deriving bands and shingles from the corpus (VERDICT r13 #4):
-    the recovery verb for the loud v1-family append refusal
+    re-deriving bands and shingles from the corpus: the recovery verb
+    for the loud hash-family append refusal
     (:func:`_assert_hash_family`). Signature parameters and the bucket
     count are read from the store meta — nothing to pass, nothing to
     mismatch — and PENDING TOMBSTONES ARE PRESERVED (unlike
@@ -468,140 +244,25 @@ def rebuild_minhash_store(
 
     ``corpus_df`` must be the store's authority corpus (the same rows
     the store was built and appended from; tombstoned rows may be
-    included — reads keep anti-joining them). The cutover is the
-    atomic generational protocol: both new tables are written beside
-    the live ones from the corpus, the live tables' file sets are
-    re-listed against a start-of-rebuild snapshot — an append that
-    completed during the (long) re-derivation window aborts the
-    rebuild loudly, since its rows are not in ``corpus_df`` and the
-    flip would silently drop them (ADVICE r14) — then the meta row
-    flips in one append (recording the current
-    :data:`~polars_text_spark.operators.dedup.SHINGLE_HASH_VERSION`),
-    then the old generation is dropped — readers never see a
-    mixed-family store. After this, :func:`append_minhash_shard` and
+    included — reads keep anti-joining them). The migration is one
+    generational cutover whose next generation is derived from the
+    corpus: an append that completes during the (long) re-derivation
+    window is in the live tables but NOT in ``corpus_df``, so the
+    cutover's pre-flip file re-list aborts the rebuild loudly instead
+    of dropping it at the flip. Readers never see a mixed-family
+    store; afterwards :func:`append_minhash_shard` and
     :func:`incremental_pairs_from_store` accept the store again, and
     :func:`pairs_from_store` is value-identical to a fresh
-    :func:`write_minhash_store` of the same corpus (parity-tested;
-    the ``minhash_store_migrate`` driver query pins the lifecycle)."""
-    from polars_text_spark.operators.dedup import SHINGLE_HASH_VERSION
-    from polars_text_spark.sources.bucketing import (
-        _list_files,
-        snapshot_files,
+    :func:`write_minhash_store` of the same corpus (the
+    ``minhash_store_migrate`` query pins the lifecycle)."""
+    store = MINHASH_STORE.open(spark, name)
+    params = {**store.params, "hashv": SHINGLE_HASH_VERSION}
+    shingles = _shingle_rows(corpus_df, text_col, id_col, params["shingle_n"])
+    store.cutover(
+        lambda nxt, _snapshot: _derive(nxt, shingles),
+        params=params,
+        verb="rebuild",
     )
-
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"minhash store '{name}' has no meta table; use "
-            "write_minhash_store to (re)create it — rebuild preserves "
-            "tombstones, which a pre-meta store cannot have recorded "
-            "reliably"
-        )
-    d = m.asDict()
-    num_perm, bands, shingle_n, buckets = (
-        int(d["num_perm"]), int(d["bands"]),
-        int(d["shingle_n"]), int(d["buckets"]),
-    )
-    gen = int(d["gen"]) if d.get("gen") is not None else 0
-    sweep_stale_generations(spark, name, _SUFFIXES, gen)
-    nxt = gen + 1
-
-    # Point-in-time snapshot of the LIVE tables' file sets (ADVICE
-    # r14): the rebuild derives the next generation from corpus_df,
-    # not from these files, so an append completing during the long
-    # re-derivation window would land rows in the old tables that are
-    # NOT in corpus_df — silently dropped at the flip. The re-list
-    # before the flip turns that into the same loud abort
-    # rewrite_generation gives rebucket/purge.
-    snapshots = {
-        s: snapshot_files(spark, phys_table(name, s, gen))
-        for s in _SUFFIXES
-    }
-
-    shingles = corpus_df.select(
-        F.col(id_col).alias("id"),
-        token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
-    )
-    new_tables = [
-        phys_table(name, "shingles", nxt),
-        phys_table(name, "bands", nxt),
-    ]
-    try:
-        # ONE tokenize pass over the corpus (round 15): the next-gen
-        # shingle table is written first and the band signatures are
-        # derived from reading it back — columnar longs, and the
-        # id-bucketed scan makes the minhash groupBy(id) exchange-free.
-        # Write order inside a NEXT generation is crash-irrelevant
-        # (orphans are swept; the store flips only at the meta append).
-        write_bucketed(
-            shingles,
-            new_tables[0],
-            bucket_by="id",
-            buckets=buckets,
-            sort_by="id",
-        )
-        banded = _banded_signatures(
-            spark.table(new_tables[0]), text_col, "id", "id",
-            num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-            shingles_col="sh",
-        ).select(
-            "id",
-            F.col("bk.band").alias("band"),
-            F.col("bk.bucket").alias("bucket"),
-            F.col("__sig").alias("sig"),
-        )
-        write_bucketed(
-            banded,
-            new_tables[1],
-            bucket_by=["band", "bucket"],
-            buckets=buckets,
-            sort_by=["band", "bucket"],
-        )
-        for s in _SUFFIXES:
-            loc, schema, before = snapshots[s]
-            if _list_files(spark, loc, schema) != before:
-                raise RuntimeError(
-                    f"store '{name}': table files changed under the "
-                    f"rebuild ({phys_table(name, s, gen)}) — an append "
-                    "raced the rebuild and its rows are not in the "
-                    "supplied corpus_df. The store is untouched (the "
-                    "appended rows are live); re-run the rebuild with "
-                    "a corpus that includes them, in a writer-free "
-                    "window"
-                )
-    except BaseException:
-        from polars_text_spark.sources.bucketing import clear_table
-
-        for t in new_tables:
-            clear_table(spark, t)
-        raise
-    _write_meta(
-        spark,
-        name,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
-        buckets=buckets,
-        hashv=SHINGLE_HASH_VERSION,
-        gen=nxt,
-    )  # THE atomic cutover — tombstones untouched
-    from polars_text_spark.sources.bucketing import (
-        clear_table,
-        postflip_append_audit,
-    )
-
-    # post-flip audit (round 16): an append that landed entirely in
-    # the re-list -> flip gap is invisible to both checks above —
-    # catch it here, preserving the old generation (see
-    # postflip_append_audit for the recovery contract)
-    postflip_append_audit(
-        spark,
-        name,
-        [(phys_table(name, s, gen), *snapshots[s]) for s in _SUFFIXES],
-        nxt,
-    )
-    for s in _SUFFIXES:  # old generation's names are known exactly
-        clear_table(spark, phys_table(name, s, gen))
 
 
 def delete_ids(ids: DataFrame, name: str, *, id_col: str = "doc_id") -> None:
@@ -610,67 +271,17 @@ def delete_ids(ids: DataFrame, name: str, *, id_col: str = "doc_id") -> None:
     ``<name>_tombstones`` table. Every read path anti-joins the set
     from then on (broadcast, so the store side keeps its co-location);
     :func:`purge_deleted` later folds the tombstones into the files in
-    one compaction pass — O(batch) deletes, amortized O(store)
-    physical reclaim."""
+    one rewrite pass — O(batch) deletes, amortized O(store) physical
+    reclaim."""
     tombstone_ids(ids, name, id_col=id_col)
 
 
 def purge_deleted(spark: SparkSession, name: str) -> None:
     """Fold the tombstone set into the store files: rewrite both
-    bucketed tables with the tombstones anti-joined away, then clear
-    the tombstone table. After this the store is equivalent to one
-    rebuilt from the filtered corpus (parity-tested). Atomic via the
-    generational protocol (round 14) — see
-    :func:`rebucket_minhash_store`; the tombstone clear happens AFTER
-    the cutover, so a crash between the two leaves reads correct
-    (the anti-join of already-purged ids is a no-op)."""
-    from polars_text_spark.sources.bucketing import clear_table
-
-    ts = _tombstones(spark, name)
-    if ts is None:
-        return
-    ts = ts.localCheckpoint(eager=True)  # survives the table drops below
-    from polars_text_spark.sources.bucketing import compact_table
-
-    m = read_meta(spark, name)
-    old_meta = m.asDict() if m is not None else None
-
-    if old_meta is None:
-        # pre-meta store: no pointer to flip — fall back to the
-        # in-place compaction swap (documented non-atomic; such
-        # stores should be rebuilt anyway — see _assert_hash_family)
-        compact_table(spark, f"{name}_bands", anti=ts, anti_on="id")
-        compact_table(spark, f"{name}_shingles", anti=ts, anti_on="id")
-        clear_table(spark, f"{name}_tombstones")
-        return
-    num_perm, bands, shingle_n, buckets = (
-        int(old_meta["num_perm"]), int(old_meta["bands"]),
-        int(old_meta["shingle_n"]), int(old_meta["buckets"]),
-    )
-    hashv = (
-        int(old_meta["hashv"]) if old_meta.get("hashv") is not None else 1
-    )
-    rewrite_generation(
-        spark,
-        name,
-        _SUFFIXES,
-        anti=ts,
-        anti_on="id",
-        gen=(
-            int(old_meta["gen"]) if old_meta.get("gen") is not None else 0
-        ),
-        write_meta=lambda gen: _write_meta(
-            spark,
-            name,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_n=shingle_n,
-            buckets=buckets,
-            hashv=hashv,
-            gen=gen,
-        ),
-    )
-    clear_table(spark, f"{name}_tombstones")
+    bucketed tables with the tombstones anti-joined away (one atomic
+    cutover), then clear the tombstone table. After this the store is
+    equivalent to one rebuilt from the filtered corpus."""
+    MINHASH_STORE.open(spark, name).purge_deleted()
 
 
 def band_stats_from_store(
@@ -682,18 +293,13 @@ def band_stats_from_store(
     deepens its family's buckets), so re-run this after appends to
     size ``band_cap`` before the next :func:`pairs_from_store`. One
     groupBy on the table's own bucketing (no Exchange on the store
-    side), tombstones respected. Stores carrying the signature column
-    get the full cross-signature recall telemetry; pre-sig stores
-    report null there (and the pair paths warn — see
-    :func:`_warn_if_legacy_sig_less`)."""
+    side), tombstones respected, with the full cross-signature recall
+    telemetry from the ``sig`` column."""
     from polars_text_spark.operators.dedup import band_bucket_stats
 
-    banded = _minus_tombstones(
-        _read_store(spark, name, "bands"), _tombstones(spark, name)
-    )
-    sig_col = "sig" if "sig" in banded.columns else None
+    banded = MINHASH_STORE.open(spark, name).read("bands")
     return band_bucket_stats(
-        banded, ["band", "bucket"], band_cap=band_cap, sig_col=sig_col
+        banded, ["band", "bucket"], band_cap=band_cap, sig_col="sig"
     )
 
 
@@ -702,9 +308,7 @@ def candidate_self_join(spark: SparkSession, name: str) -> DataFrame:
     exposed separately so tests can assert its plan has NO Exchange
     (both sides read the same bucketing; a pending tombstone set adds
     only a broadcast anti-join above each scan)."""
-    banded = _minus_tombstones(
-        _read_store(spark, name, "bands"), _tombstones(spark, name)
-    )
+    banded = MINHASH_STORE.open(spark, name).read("bands")
     left = banded.select(F.col("id").alias("id_a"), "band", "bucket")
     right = banded.select(F.col("id").alias("id_b"), "band", "bucket")
     return left.join(right, ["band", "bucket"]).filter(
@@ -726,30 +330,22 @@ def pairs_from_store(
     bucketed band table. The hot-band guard's member-count window
     partitions on (band, bucket) — the table's own bucketing — so it
     adds no Exchange either (plan-asserted in tests)."""
-    __ts = _tombstones(spark, name)
-    __gen = store_generation(spark, name)  # one resolution, both reads
-    banded = _minus_tombstones(
-        spark.table(phys_table(name, "bands", __gen)), __ts
-    )
+    store = MINHASH_STORE.open(spark, name)
+    banded = store.read("bands")
     # cache=False: the band table IS the materialization — re-scanning
     # co-located buckets per consumer beats pinning the corpus.
-    star_by = ("sig",) if "sig" in banded.columns else ()
     if not (band_cap is None or isinstance(band_cap, int)):
-        # auto (round 15): the audit re-scans the bucketed store — a
-        # co-located groupBy, no pin needed
+        # auto: the audit re-scans the bucketed store — a co-located
+        # groupBy, no pin needed
         from polars_text_spark.operators.dedup import resolve_band_cap
 
         band_cap = resolve_band_cap(
-            banded, ["band", "bucket"], band_cap,
-            sig_col=star_by[0] if star_by else None,
+            banded, ["band", "bucket"], band_cap, sig_col="sig"
         )
-    _warn_if_legacy_sig_less(name, star_by, band_cap)
     cand = _guarded_self_pairs(
-        banded, ["band", "bucket"], band_cap, cache=False, star_by=star_by
+        banded, ["band", "bucket"], band_cap, cache=False, star_by=("sig",)
     ).select("id_a", "id_b")
-    sh = _minus_tombstones(
-        spark.table(phys_table(name, "shingles", __gen)), __ts
-    )
+    sh = store.read("shingles")
     a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     return _verify_jaccard(cand, a, b, jaccard_threshold)
@@ -778,9 +374,9 @@ def incremental_pairs_from_store(
     see :func:`~polars_text_spark.operators.dedup.
     _guarded_cross_candidates` — adds no Exchange on the store side).
     Signature parameters must match the ones used at write time —
-    validated against the store meta when the store records one (a
-    mismatch would band the shard under planes that can never collide
-    with standing keys: silent recall 0). ``collapse_left``
+    validated against the store meta (a mismatch would band the shard
+    under planes that can never collide with standing keys: silent
+    recall 0). ``collapse_left``
     (False / True / ``"auto"``): shingle-set-identical shard docs ride
     the pipeline as ONE representative, pairs fanned back —
     output-identical; ``"auto"`` probes first and collapses only when
@@ -798,19 +394,17 @@ def incremental_pairs_from_store(
             f"collapse_left must be False, True or 'auto', got "
             f"{collapse_left!r}"
         )
-    m = read_meta(spark, name)  # ONE meta read: params + hashv + gen
-    if m is not None:
-        md = m.asDict()
-        meta3 = (int(md["num_perm"]), int(md["bands"]), int(md["shingle_n"]))
-        if (num_perm, bands, shingle_n) != meta3:
-            raise ValueError(
-                f"minhash store '{name}' was written with num_perm="
-                f"{meta3[0]}, bands={meta3[1]}, shingle_n={meta3[2]}; "
-                f"the passed parameters (num_perm={num_perm}, bands="
-                f"{bands}, shingle_n={shingle_n}) would produce band "
-                "keys that can never collide with the store"
-            )
-    _assert_hash_family(spark, name, meta_row=m)
+    store = MINHASH_STORE.open(spark, name)
+    meta3 = tuple(store.params[c] for c in ("num_perm", "bands", "shingle_n"))
+    if (num_perm, bands, shingle_n) != meta3:
+        raise ValueError(
+            f"minhash store '{name}' was written with num_perm="
+            f"{meta3[0]}, bands={meta3[1]}, shingle_n={meta3[2]}; "
+            f"the passed parameters (num_perm={num_perm}, bands="
+            f"{bands}, shingle_n={shingle_n}) would produce band "
+            "keys that can never collide with the store"
+        )
+    _assert_hash_family(name, store.params)
     a = None
     members = None
     if collapse_left:
@@ -841,33 +435,20 @@ def incremental_pairs_from_store(
         F.col("bk.band").alias("band"),
         F.col("bk.bucket").alias("bucket"),
     )
-    __ts = _tombstones(spark, name)
-    __gen = (
-        int(m["gen"])
-        if m is not None and m.asDict().get("gen") is not None
-        else 0
-    )
-    standing = _minus_tombstones(
-        spark.table(phys_table(name, "bands", __gen)), __ts
-    )
-    star_by = ("sig",) if "sig" in standing.columns else ()
+    standing = store.read("bands")
     if not (band_cap is None or isinstance(band_cap, int)):
         from polars_text_spark.operators.dedup import resolve_band_cap
 
         band_cap = resolve_band_cap(
-            standing, ["band", "bucket"], band_cap,
-            sig_col=star_by[0] if star_by else None,
+            standing, ["band", "bucket"], band_cap, sig_col="sig"
         )
-    _warn_if_legacy_sig_less(name, star_by, band_cap)
     standing = standing.select(
-        F.col("id").alias("id_b"), "band", "bucket", *star_by
+        F.col("id").alias("id_b"), "band", "bucket", "sig"
     )
     cand = _guarded_cross_candidates(
-        new_bands, standing, ["band", "bucket"], band_cap, star_by=star_by
+        new_bands, standing, ["band", "bucket"], band_cap, star_by=("sig",)
     )
-    sh = _minus_tombstones(
-        spark.table(phys_table(name, "shingles", __gen)), __ts
-    )
+    sh = store.read("shingles")
     b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     pairs = _verify_jaccard(cand, a, b, jaccard_threshold)
     if members is not None:

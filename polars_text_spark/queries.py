@@ -8596,7 +8596,7 @@ def q_minhash_store_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from polars_text_spark.operators.dedup import SHINGLE_HASH_VERSION
     from polars_text_spark.operators.dedup_store import (
-        _write_meta,
+        MINHASH_STORE,
         append_minhash_shard,
         delete_ids,
         pairs_from_store,
@@ -8626,9 +8626,11 @@ def q_minhash_store_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # simulate the legacy store: stamp the v1 family into the meta
     # (reset: replace the fresh store's meta log, not append to it)
-    _write_meta(
-        spark, name, num_perm=64, bands=16, shingle_n=3, buckets=4,
-        hashv=1, gen=0, reset=True,
+    MINHASH_STORE.write_meta(
+        spark, name,
+        {"num_perm": 64, "bands": 16, "shingle_n": 3, "buckets": 4,
+         "hashv": 1},
+        0, reset=True,
     )
     try:
         append_minhash_shard(shard, name)
@@ -8752,7 +8754,7 @@ def q_minhash_store_generations(
     import os
 
     from polars_text_spark.operators.dedup_store import (
-        _phys,
+        MINHASH_STORE,
         append_minhash_shard,
         delete_ids,
         purge_deleted,
@@ -8772,15 +8774,14 @@ def q_minhash_store_generations(
     delete_ids(docs.filter(F.col("doc_id") % 32 == 0), name)
     purge_deleted(spark, name)
     rebucket_minhash_store(spark, name, 4)
-    from polars_text_spark.sources.bucketing import read_meta
-
-    m = read_meta(spark, name)
-    bands_rows = spark.table(_phys(spark, name, "bands")).count()
-    shingle_rows = spark.table(_phys(spark, name, "shingles")).count()
+    store = MINHASH_STORE.open(spark, name)
+    m = store.params
+    bands_rows = spark.table(store.table("bands")).count()
+    shingle_rows = spark.table(store.table("shingles")).count()
     return spark.createDataFrame(
         [(
-            int(m["num_perm"]), int(m["bands"]), int(m["shingle_n"]),
-            int(m["buckets"]), int(m["hashv"]), int(m["gen"]),
+            m["num_perm"], m["bands"], m["shingle_n"],
+            m["buckets"], m["hashv"], store.gen,
             int(bands_rows), int(shingle_rows),
             bool(spark.catalog.tableExists(f"{name}_tombstones")),
         )],

@@ -15,20 +15,23 @@ from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import dataclass, replace
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
+    "Store",
+    "StoreSpec",
     "check_generation_unchanged",
     "clear_table",
-    "compact_table",
     "minus_tombstones",
     "phys_table",
     "read_bucketed",
     "read_meta",
     "read_tombstones",
-    "rewrite_generation",
+    "run_concurrently",
     "snapshot_files",
     "store_generation",
     "sweep_stale_generations",
@@ -93,151 +96,11 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def compact_table(
-    spark: SparkSession,
-    table: str,
-    *,
-    anti: DataFrame | None = None,
-    anti_on: str | list[str] | None = None,
-    new_buckets: int | None = None,
-) -> int:
-    """Rewrite a bucketed table in place, merging append fragments.
-
-    Incremental ingest (``append_ann_shard``-style) adds a new file
-    set per bucket per append; after many small appends the store
-    reads degrade to many-tiny-file scans. Compaction reads the table,
-    repartitions on the bucket columns into exactly ``num_buckets``
-    partitions (Spark's hash repartitioning uses the same Murmur3 hash
-    as bucketing, so partitions align 1:1 with bucket ids and each
-    bucket lands in ONE file), rewrites under a temp name, then swaps
-    via DROP + RENAME. Bucket spec, sort spec, and table contents are
-    preserved — co-located joins stay shuffle-free (plan-tested).
-
-    ``anti`` (with join keys ``anti_on``) physically drops matching
-    rows during the rewrite — the tombstone-merge half of the store
-    deletion protocol (``delete_ids`` + ``purge_deleted`` in the store
-    modules): tombstones are anti-joined at read time until compaction
-    folds them into the files. The anti side is broadcast (tombstone
-    sets are small relative to the store), so the rewrite stays one
-    pass, one shuffle (the bucket repartition it already does).
-
-    Returns the number of data files after compaction. Not atomic: a
-    reader concurrent with the swap can observe the drop; run it in
-    the same maintenance window as the appends it merges.
-
-    ``new_buckets`` rewrites the table under a DIFFERENT bucket count
-    (same bucket/sort columns) — the re-bucketing half of the store
-    lifecycle: a store that grew 100x past its write-time bucket count
-    reads corpus/buckets rows per co-located task, and the only cure
-    is one rewrite shuffle into more buckets. Contents are unchanged;
-    co-located joins stay shuffle-free at the NEW count (both tables
-    of a store must be rewritten together — see ``rebucket_store`` /
-    ``rebucket_minhash_store``).
-    """
-    info = _describe(spark, table)
-    if "Num Buckets" not in info:
-        raise ValueError(f"table '{table}' is not bucketed")
-    # the swap is DROP + RENAME (not atomic); a cached table means a
-    # live reader holds block references that the drop would
-    # invalidate mid-query — refuse rather than corrupt
-    try:
-        cached = spark.catalog.isCached(table)
-    except Exception:
-        cached = False  # isCached can throw for exotic catalog states; proceed
-    if cached:
-        raise ValueError(
-            f"table '{table}' is currently cached; uncache it "
-            "before compaction (the DROP+RENAME swap would "
-            "invalidate reader state)"
-        )
-    buckets = int(info["Num Buckets"])
-    if new_buckets is not None:
-        if new_buckets < 1:
-            raise ValueError(f"new_buckets must be >= 1, got {new_buckets}")
-        buckets = int(new_buckets)
-
-    bucket_cols = _spec_cols(info, "Bucket Columns")
-    sort_cols = _spec_cols(info, "Sort Columns")
-    # the catalog's own Location, NOT warehouse-dir + table-name
-    # reconstruction — the latter breaks for non-default databases
-    # (<warehouse>/db.db/tbl) and custom-location tables
-    if "Location" not in info:
-        raise ValueError(f"table '{table}' reports no Location")
-    location = info["Location"]
-    schema = spark.table(table).schema
-    tmp = f"{table}__compact"
-    clear_table(spark, tmp)
-    # Read the raw FILES, not the catalog table: a table-scan advertises
-    # the bucket partitioning, so the planner elides the repartition as
-    # redundant and each input fragment writes its own output file —
-    # exactly the fragmentation we're here to undo. The plain file scan
-    # carries no partitioning claim, so the repartition applies and each
-    # bucket lands in one task (repartition hash == bucketing hash).
-    df = spark.read.parquet(location)
-    if anti is not None:
-        keys = [anti_on] if isinstance(anti_on, str) else list(anti_on or [])
-        if not keys:
-            raise ValueError("anti requires anti_on join keys")
-        df = df.join(F.broadcast(anti.select(keys)), keys, "left_anti")
-    # write_bucketed repartitions on the bucket columns itself
-    # (round 16), so each bucket still lands in one file
-    write_bucketed(
-        df,
-        tmp,
-        bucket_by=bucket_cols,
-        buckets=buckets,
-        sort_by=sort_cols or None,
-    )
-    clear_table(spark, table)
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-    # re-resolve: the rename moved the managed directory. File count
-    # via Spark's filesystem layer (works on any warehouse, not just a
-    # driver-local one — see _list_files).
-    final_loc = _describe(spark, table)["Location"]
-    return len(_list_files(spark, final_loc, schema))
-
-
-def probe_id_clash(
-    shard: DataFrame,
-    standing: DataFrame,
-    ts: DataFrame | None,
-    *,
-    id_col: str,
-):
-    """First shard id already present in ``standing`` (a bucketed
-    store's id column) or in the tombstone set ``ts``, else None.
-
-    Join direction matters at scale: the SHARD is the probe side
-    (semi-joined against the store), never broadcast — a web-scale
-    daily shard would blow the broadcast limit — and the standing
-    side is the id-bucketed store table, so its side of the join
-    reads co-located buckets without a shuffle; only the shard (the
-    O(shard) bound appends document) moves. The tombstone set is
-    checked with a broadcast build (deletion batches are small)."""
-    shard_ids = shard.select(F.col(id_col).alias("id"))
-    clash = (
-        shard_ids.join(standing.select("id"), "id", "left_semi")
-        .limit(1)
-        .collect()
-    )
-    if not clash and ts is not None:
-        # a tombstoned id is still physically present (or about to be
-        # anti-joined away at read time) — re-appending it before
-        # purge_deleted would be silently swallowed by the read-time
-        # anti-join, so it clashes too
-        clash = (
-            shard_ids.join(F.broadcast(ts), "id", "left_semi")
-            .limit(1)
-            .collect()
-        )
-    return clash[0]["id"] if clash else None
-
-
 def tombstone_ids(ids: DataFrame, name: str, *, id_col: str) -> None:
     """Append a batch of ids to the store's ``<name>_tombstones``
     table (single ``id`` column) — the logical half of the deletion
     protocol shared by the MinHash and ANN stores: O(batch) per
-    delete, read paths anti-join the set, compaction reclaims."""
+    delete, read paths anti-join the set, ``purge_deleted`` reclaims."""
     spark = ids.sparkSession
     frame = ids.select(F.col(id_col).alias("id")).distinct()
     exists = spark.catalog.tableExists(f"{name}_tombstones")
@@ -270,64 +133,50 @@ def minus_tombstones(df: DataFrame, ts: DataFrame | None, *, on: str = "id") -> 
 
 
 # ---------------------------------------------------------------------------
-# Generational store maintenance (round 14, VERDICT r13 #2)
+# Generational stores
 #
-# compact_table's DROP+RENAME swap is not atomic, and a STORE rewrite
-# (rebucket/purge) does TWO of them: a reader or appender landing
-# between the two swaps sees the store's tables at different bucket
-# counts — co-location silently broken. The store modules therefore
-# version the PHYSICAL table names (``<name>_bands_g3``) and treat the
-# small ``<name>_meta`` table as the atomic pointer: readers and
-# appenders resolve meta -> current physical tables, maintenance
-# writes a complete NEXT generation beside the live one, verifies the
-# sources didn't move, flips the meta row in ONE table overwrite, and
-# only then drops the old generation. Every failure mode is now
-# either invisible (crash before the flip: the live generation was
-# never touched; re-running sweeps the orphaned half-built tables) or
-# complete (crash after the flip: the store IS the new generation;
-# re-running sweeps the stale old tables).
+# The ANN, MinHash and Bloom stores keep their state in a few catalog
+# tables plus a small ``<name>_meta`` table. The PHYSICAL table names
+# are versioned (``<name>_bands`` at generation 0, ``<name>_bands_g3``
+# after three maintenance cutovers) and the meta table is the atomic
+# pointer: readers and appenders resolve meta -> current physical
+# tables, while maintenance writes a complete NEXT generation beside
+# the live one, verifies that the sources did not move, flips the meta
+# row in ONE append, and only then drops the old generation. Every
+# failure mode is either invisible (crash before the flip: the live
+# generation was never touched, and the next maintenance run sweeps
+# the orphaned half-built tables) or complete (crash after the flip:
+# the store IS the new generation; the stale tables are swept alike).
+#
+# :class:`StoreSpec` describes one store kind and :class:`Store` is one
+# opened store; the cutover protocol exists once, in Store.cutover.
 # ---------------------------------------------------------------------------
 
 
 def phys_table(name: str, suffix: str, gen: int) -> str:
-    """Physical catalog name of a store table at generation ``gen``.
-    Generation 0 is the legacy unsuffixed layout (every store written
-    before round 14, and every fresh write — the suffix only appears
-    once maintenance has produced generation >= 1)."""
+    """Physical catalog name of a store table at generation ``gen``:
+    unsuffixed at generation 0 (every fresh write), ``_g<gen>`` once
+    maintenance has produced generation >= 1."""
     base = f"{name}_{suffix}"
     return base if gen == 0 else f"{base}_g{gen}"
 
 
 def read_meta(spark: SparkSession, name: str):
     """Current ``<name>_meta`` row, or None when the table is absent
-    or empty. Meta tables are an APPEND-ONLY log since round 15: a
-    maintenance cutover appends a new row at ``gen + 1`` instead of
-    overwriting the table (``saveAsTable(mode=overwrite)`` is a DROP +
-    CREATE, so a crash mid-flip left NO meta table at all — ADVICE
-    r14); the current store state is the highest-``gen`` row, which
-    this helper resolves for every reader. Rows predating the ``gen``
-    column sort as generation 0."""
+    or empty. The meta table is an APPEND-ONLY log: a maintenance
+    cutover appends a row at ``gen + 1`` (see :func:`write_meta_row`)
+    and the current store state is the highest-``gen`` row."""
     if not spark.catalog.tableExists(f"{name}_meta"):
         return None
     rows = spark.table(f"{name}_meta").collect()
-    if not rows:
-        return None
-
-    def _gen(r) -> int:
-        d = r.asDict()
-        return int(d["gen"]) if d.get("gen") is not None else 0
-
-    return max(rows, key=_gen)
+    return max(rows, key=lambda r: r["gen"]) if rows else None
 
 
 def store_generation(spark: SparkSession, name: str) -> int:
     """Current generation recorded in ``<name>_meta`` (0 when the
-    meta table is absent or predates the ``gen`` column)."""
+    meta table is absent)."""
     row = read_meta(spark, name)
-    if row is None:
-        return 0
-    d = row.asDict()
-    return int(d["gen"]) if d.get("gen") is not None else 0
+    return 0 if row is None else int(row["gen"])
 
 
 def _list_files(spark: SparkSession, location: str, schema) -> set[str]:
@@ -336,12 +185,11 @@ def _list_files(spark: SparkSession, location: str, schema) -> set[str]:
     ``inputFiles``), never a driver-side ``os.walk``: the warehouse may
     be HDFS/S3 or otherwise invisible to the driver's local
     filesystem, where a walk silently returns an EMPTY set — and an
-    empty snapshot would make :func:`rewrite_generation` write an
-    empty next generation over a live store (ADVICE r14). The
-    path-based read builds a fresh file index per call (no catalog
-    relation caching), so a re-list always reflects concurrently
-    appended files. ``schema`` avoids footer-inference and keeps the
-    call listing-only (no Spark job)."""
+    empty snapshot would make a cutover write an empty next generation
+    over a live store. The path-based read builds a fresh file index
+    per call (no catalog relation caching), so a re-list always
+    reflects concurrently appended files. ``schema`` avoids
+    footer-inference and keeps the call listing-only (no Spark job)."""
     return set(spark.read.schema(schema).parquet(location).inputFiles())
 
 
@@ -352,24 +200,15 @@ def snapshot_files(
     point-in-time snapshot the maintenance race checks compare; re-list
     with :func:`_list_files` over the returned location + schema (no
     second DESCRIBE round-trip)."""
-    info = _describe(spark, table)
+    info = {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect()
+    }
     if "Location" not in info:
         raise ValueError(f"table '{table}' reports no Location")
     location = info["Location"]
     schema = spark.table(table).schema
     return location, schema, _list_files(spark, location, schema)
-
-
-def _describe(spark: SparkSession, table: str) -> dict:
-    return {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect()
-    }
-
-
-def _spec_cols(info: dict, key: str) -> list[str]:
-    raw = info.get(key, "[]").strip("[]")
-    return [c.strip().strip("`") for c in raw.split(",") if c.strip()]
 
 
 def sweep_stale_generations(
@@ -379,17 +218,17 @@ def sweep_stale_generations(
     than ``current_gen`` — the self-healing half of the protocol: a
     crash before the meta flip leaves orphan half-built next-gen
     tables, a crash after it leaves stale previous-gen tables; both
-    are swept here (run at the start of every maintenance op and after
-    a successful cutover). Returns the dropped table names."""
+    are swept here (run at the start of every cutover; ``current_gen``
+    -1 drops every generation, for a fresh write). Returns the dropped
+    table names."""
     import re
 
     dropped: list[str] = []
     current = {phys_table(name, s, current_gen).lower() for s in suffixes}
     # ONE catalog listing for all suffixes. SHOW TABLES, not
     # catalog.listTables: listTables resolves per-table metadata
-    # objects (~1.3 s against a 41-table session catalog, measured
-    # round 16) where the SQL command returns bare names in one
-    # collect (~0.08 s) — maintenance calls this at every op
+    # objects (~1.3 s against a 41-table session catalog) where the
+    # SQL command returns bare names in one collect (~0.08 s)
     tables = [
         r["tableName"] for r in spark.sql("SHOW TABLES").collect()
     ]
@@ -404,15 +243,15 @@ def sweep_stale_generations(
 
 
 def postflip_append_audit(spark, name, entries, new_gen) -> None:
-    """The third and final race check of a generational cutover
-    (round 16 — closes the window ADVICE r15 documented): re-list the
-    OLD generation's files AFTER the meta flip, BEFORE dropping it.
-    ``entries`` is ``[(src_table, location, schema, before_files)]``.
+    """The third and final race check of a generational cutover:
+    re-list the OLD generation's files AFTER the meta flip, BEFORE
+    dropping it. ``entries`` is ``[(src_table, location, schema,
+    before_files)]``.
 
     The three checks together cover every append/cutover interleaving:
 
     - append's files land before the pre-flip re-list → the cutover
-      aborts loudly, store untouched (step 4);
+      aborts loudly, store untouched;
     - append's own post-write generation check runs after the flip →
       the APPEND raises conservatively (check_generation_unchanged);
     - append lands entirely between the pre-flip re-list and the flip,
@@ -446,191 +285,340 @@ def postflip_append_audit(spark, name, entries, new_gen) -> None:
         )
 
 
-def rewrite_generation(
-    spark: SparkSession,
-    name: str,
-    suffixes,
-    *,
-    new_buckets: int | None = None,
-    anti: DataFrame | None = None,
-    anti_on: str | None = None,
-    write_meta=None,
-    gen: int | None = None,
-) -> int:
-    """Rewrite ALL of a store's bucketed tables into the next
-    generation and atomically cut the store over to it. Returns the
-    new generation number.
+def run_concurrently(spark: SparkSession, tasks) -> None:
+    """Run independent store-table jobs (callables) from a small
+    thread pool: the second table's tasks back-fill executors freed by
+    the first's tail instead of paying two sequential job tails and
+    commits (Spark runs concurrent driver-thread jobs FIFO).
 
-    Protocol (each step's failure mode in brackets):
+    Concurrency assumption: the session catalog is Spark's in-memory
+    catalog (``spark.sql.catalogImplementation=in-memory``, the
+    package session's default). Concurrent ``saveAsTable`` DDL is safe
+    against it; against an embedded-Derby Hive metastore it can fail
+    intermittently, so a Hive-backed deployment must not share this
+    pool across table writes.
 
-    1. sweep orphan/stale generations from a previous failed run;
-    2. snapshot every source table's parquet FILE SET — the rewrite
-       reads these exact files, so the rewrite itself is a consistent
-       point-in-time view even while appends land [no store change];
-    3. write every ``<name>_<suffix>_g<gen+1>`` table (repartitioned
-       on its own bucket columns — raw file reads carry no bucket
-       claim, so the repartition applies and each bucket lands in one
-       file) [crash: orphan next-gen tables, swept on re-run];
-    4. re-list every source file set; ANY difference means an append
-       raced the rewrite — the half-built generation is dropped and
-       the rewrite raises instead of silently losing the append
-       [loud abort, store untouched, appended rows intact];
-    5. flip ``<name>_meta`` via ``write_meta(gen)`` — ONE APPEND of
-       the next-generation row (:func:`write_meta_row`): readers
-       resolve the highest-``gen`` row, the append is a single
-       file-manifest commit, and the meta table exists at every
-       instant [crash before the commit: the new row is invisible and
-       the store is the old generation, complete; after: the store is
-       the new generation, complete — there is no missing-meta state];
-    6. drop the old generation [crash: stale tables, swept on the
-       next maintenance run].
+    Each worker runs under its own job group. On the first failure the
+    siblings' job groups are cancelled (a worker that has not started
+    yet skips its job), the pool drains, and that first error is
+    re-raised — the caller then clears whatever tables were left
+    half-written."""
+    import threading
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor, as_completed
 
-    ``write_meta(gen)`` is supplied by the store module (meta schemas
-    differ between stores); it must perform exactly one
-    :func:`write_meta_row` append of the ``<name>_meta`` row at the
-    new generation. ``anti``/``anti_on`` drop matching rows during the
-    rewrite (the purge path). ``new_buckets`` rewrites at a different
-    bucket count (the rebucket path). ``gen`` lets a caller that
-    already read the meta row skip the re-resolution.
+    sc = spark.sparkContext
+    failed = threading.Event()
 
-    Race coverage (round 16 — the formerly-documented residual window
-    is CLOSED by detection): an append that resolves the OLD
-    generation from meta and finishes during the cutover is caught in
-    every interleaving by one of THREE checks — the step-4 pre-flip
-    re-list (cutover aborts, store untouched), the append's own
-    post-write generation check (the append raises conservatively),
-    or the step-5.5 post-flip audit (:func:`postflip_append_audit`:
-    the old generation's files re-listed once more AFTER the flip,
-    catching an append that landed entirely inside the re-list→flip
-    gap). The post-flip raise is post-hoc — the cutover has committed
-    and the racing append's rows must be re-run against the new
-    generation (always safe; the old generation is preserved until
-    the next sweep) — so a writer-free maintenance window remains the
-    OPERATIONALLY clean choice, but a violation is now always loud,
-    never a silent loss.
-    """
-    if write_meta is None:
-        raise ValueError("rewrite_generation requires write_meta")
-    if gen is None:
-        gen = store_generation(spark, name)
-    sweep_stale_generations(spark, name, suffixes, gen)
-    nxt = gen + 1
+    def run(group: str, task) -> None:
+        if failed.is_set():
+            return
+        sc.setJobGroup(group, "store table write")
+        task()
 
-    # ONE catalog round-trip per table: location + bucket spec come
-    # from the same DESCRIBE, and the step-4 re-list reuses the
-    # resolved location + schema instead of re-describing (the
-    # fixed per-maintenance-op driver overhead VERDICT r14 flagged
-    # on ann_store_delete).
-    snapshots: dict[str, tuple[str, object, set[str]]] = {}
-    specs: dict[str, tuple[int, list, list]] = {}
-    for s in suffixes:
-        src = phys_table(name, s, gen)
-        info = _describe(spark, src)
-        if "Num Buckets" not in info:
-            raise ValueError(f"table '{src}' is not bucketed")
-        if "Location" not in info:
-            raise ValueError(f"table '{src}' reports no Location")
-        schema = spark.table(src).schema
-        location = info["Location"]
-        files = _list_files(spark, location, schema)
-        if not files and spark.table(src).limit(1).count() > 0:
-            # belt-and-braces (ADVICE r14): a listing that misses live
-            # data would rewrite the store as EMPTY and drop it
-            raise RuntimeError(
-                f"store '{name}': file enumeration of '{src}' returned "
-                "no files but the table has rows — refusing to rewrite "
-                "(the snapshot layer cannot see the warehouse files)"
+    with ThreadPoolExecutor(max_workers=min(4, max(1, len(tasks)))) as pool:
+        groups = {}
+        for task in tasks:
+            group = f"store-{uuid.uuid4().hex}"
+            groups[pool.submit(run, group, task)] = group
+        for fut in as_completed(groups):
+            if fut.exception() is None:
+                continue
+            failed.set()
+            for other, group in groups.items():
+                if not other.done():
+                    sc.cancelJobGroup(group)
+            fut.result()  # re-raise the first failure
+
+
+@dataclass(frozen=True)
+class StoreSpec:
+    """One generational store kind.
+
+    ``kind`` names it in errors and ``writer`` is the public function
+    that (re)creates it. ``tables`` lists ``(suffix, bucket columns)``
+    in APPEND order; the bucket columns double as the sort columns, and
+    ``None`` marks an unbucketed table. The LAST table is the one whose
+    append commits a batch: id novelty and the id-clash probe are
+    decided on it, so a crash between two appends leaves only rows the
+    retry re-appends harmlessly. ``meta`` is the meta row's parameter
+    schema (``gen int`` follows it); a bucketed store records its
+    bucket count as ``buckets``. ``tombstones`` says whether the store
+    supports ``delete_ids``."""
+
+    kind: str
+    writer: str
+    tables: tuple
+    meta: str
+    tombstones: bool = True
+
+    @property
+    def suffixes(self) -> tuple[str, ...]:
+        return tuple(s for s, _ in self.tables)
+
+    @property
+    def param_names(self) -> list[str]:
+        return [c.split()[0] for c in self.meta.split(",")]
+
+    def open(
+        self, spark: SparkSession, name: str, *, required: bool = True
+    ) -> Store | None:
+        """The store's parameters, generation and tombstones from ONE
+        meta-log collect (plus the tombstone table's existence check).
+        A store without a meta row raises, or returns None when
+        ``required`` is false (the streaming sinks' bootstrap gate)."""
+        row = read_meta(spark, name)
+        if row is None:
+            if not required:
+                return None
+            raise ValueError(
+                f"{self.kind} store '{name}' has no meta table; "
+                f"(re)create it with {self.writer}"
             )
-        snapshots[s] = (location, schema, files)
-        specs[s] = (
-            int(info["Num Buckets"]),
-            _spec_cols(info, "Bucket Columns"),
-            _spec_cols(info, "Sort Columns"),
+        params = {c: int(row[c]) for c in self.param_names}
+        ts = read_tombstones(spark, name) if self.tombstones else None
+        return Store(self, spark, name, params, int(row["gen"]), ts)
+
+    def create(
+        self, spark: SparkSession, name: str, params: dict, build
+    ) -> None:
+        """Fresh write at generation 0: sweep every physical generation
+        a previous store of this name left behind, ``build(store)``
+        the tables, drop the previous store's tombstones (they would
+        delete rows from the fresh store at read time and block
+        re-appending their ids), then start a new meta log. The meta
+        row is written LAST: a crash mid-write leaves no meta, so a
+        retried bootstrap rewrites instead of trusting partial tables."""
+        sweep_stale_generations(spark, name, self.suffixes, -1)
+        build(Store(self, spark, name, dict(params), 0, None))
+        if self.tombstones:
+            clear_table(spark, f"{name}_tombstones")
+        self.write_meta(spark, name, params, 0, reset=True)
+
+    def write_meta(
+        self, spark: SparkSession, name: str, params: dict, gen: int,
+        *, reset: bool = False,
+    ) -> None:
+        """Write the meta row (see :func:`write_meta_row`): ``reset``
+        starts a new log, otherwise the row at ``gen`` is appended —
+        the atomic flip of a cutover."""
+        values = tuple(int(params[c]) for c in self.param_names)
+        meta = spark.createDataFrame(
+            [values + (int(gen),)], f"{self.meta}, gen int"
+        )
+        write_meta_row(spark, meta, f"{name}_meta", reset=reset)
+
+
+@dataclass(frozen=True)
+class Store:
+    """One opened store at one generation (see :meth:`StoreSpec.open`)."""
+
+    spec: StoreSpec
+    spark: SparkSession
+    name: str
+    params: dict
+    gen: int
+    tombstones: DataFrame | None
+
+    def table(self, suffix: str) -> str:
+        return phys_table(self.name, suffix, self.gen)
+
+    def read(self, suffix: str) -> DataFrame:
+        """The table minus pending tombstones (a broadcast anti-join,
+        so the scan keeps its bucket co-location)."""
+        return minus_tombstones(
+            self.spark.table(self.table(suffix)), self.tombstones
         )
 
-    if new_buckets is not None and new_buckets < 1:
-        raise ValueError(f"new_buckets must be >= 1, got {new_buckets}")
-    if anti is not None and not anti_on:
-        raise ValueError("anti requires anti_on join keys")
-
-    def _rewrite_one(s: str) -> str:
-        src = phys_table(name, s, gen)
-        dst = phys_table(name, s, nxt)
-        _, schema, files = snapshots[s]
-        buckets, bucket_cols, sort_cols = specs[s]
-        if new_buckets is not None:
-            buckets = int(new_buckets)
-        if files:
-            df = spark.read.schema(schema).parquet(*sorted(files))
+    def write_table(
+        self, suffix: str, df: DataFrame, *, mode: str = "overwrite"
+    ) -> None:
+        keys = dict(self.spec.tables)[suffix]
+        table = self.table(suffix)
+        if keys is None:
+            if mode == "overwrite":
+                # also removes a warehouse directory a previous
+                # session's drop left behind (invisible to the catalog
+                # sweep), which would block the saveAsTable
+                clear_table(self.spark, table)
+            df.write.format("parquet").mode(mode).saveAsTable(table)
         else:
-            df = spark.table(src).limit(0)
-        if anti is not None:
-            df = df.join(
-                F.broadcast(anti.select(anti_on)), anti_on, "left_anti"
+            write_bucketed(
+                df, table, bucket_by=list(keys), buckets=self.params["buckets"],
+                sort_by=list(keys), mode=mode,
             )
-        # write_bucketed repartitions on the bucket columns itself
-        write_bucketed(
-            df,
-            dst,
-            bucket_by=bucket_cols,
-            buckets=buckets,
-            sort_by=sort_cols or None,
+
+    def write_tables(self, frames: dict) -> None:
+        """Write independent tables concurrently (:func:`run_concurrently`)."""
+        run_concurrently(
+            self.spark,
+            [partial(self.write_table, s, df) for s, df in frames.items()],
         )
-        return dst
 
-    try:
-        # The per-suffix rewrites are INDEPENDENT jobs (each reads its
-        # own snapshot file set and writes its own next-gen table), so
-        # submit them from a small thread pool (guide §2.6): the second
-        # table's tasks back-fill executors freed by the first's tail
-        # instead of paying two sequential job tails + commits. Spark's
-        # scheduler runs concurrent driver-thread jobs FIFO, which is
-        # exactly the back-fill behaviour wanted here.
-        from concurrent.futures import ThreadPoolExecutor
+    def append(self, frames: dict) -> None:
+        """Append ``frames`` (suffix -> rows) as new files in the spec's
+        table order — the standing files are never rewritten — then
+        raise if a maintenance cutover flipped the generation meanwhile
+        (:func:`check_generation_unchanged`)."""
+        for suffix in self.spec.suffixes:
+            self.write_table(suffix, frames[suffix], mode="append")
+        check_generation_unchanged(self.spark, self.name, self.gen)
 
-        suffixes = list(suffixes)
-        with ThreadPoolExecutor(
-            max_workers=min(4, max(1, len(suffixes)))
-        ) as pool:
-            list(pool.map(_rewrite_one, suffixes))
+    def _ids(self) -> DataFrame:
+        """The id column of the commit table (last in append order)."""
+        return self.spark.table(self.table(self.spec.suffixes[-1])).select("id")
 
+    def assert_disjoint(self, shard: DataFrame, id_col: str) -> None:
+        """Refuse a shard sharing an id with the store or its pending
+        tombstones: a duplicate id would double its rows, and a
+        tombstoned one would be swallowed by the read-time anti-join
+        until purge. The SHARD is the probe side, semi-joined against
+        the id-bucketed commit table (co-located buckets, no shuffle
+        on the store side) and never broadcast — a web-scale daily
+        shard would blow the broadcast limit; the tombstone set is a
+        broadcast build (deletion batches are small)."""
+        shard_ids = shard.select(F.col(id_col).alias("id"))
+        clash = shard_ids.join(self._ids(), "id", "left_semi").limit(1).collect()
+        if not clash and self.tombstones is not None:
+            clash = (
+                shard_ids.join(F.broadcast(self.tombstones), "id", "left_semi")
+                .limit(1)
+                .collect()
+            )
+        if clash:
+            raise ValueError(
+                f"shard id {clash[0]['id']!r} already exists in "
+                f"{self.spec.kind} store '{self.name}' (or is tombstoned "
+                "awaiting purge); appending would duplicate its rows and "
+                "corrupt later results (the incremental-ingest contract "
+                "requires disjoint ids)"
+            )
+
+    def novel(self, batch: DataFrame, id_col: str) -> DataFrame:
+        """``batch`` minus the ids already stored or tombstoned — the
+        streaming sinks' idempotent form of :meth:`assert_disjoint`,
+        with the same join shape."""
+        novel = batch.join(
+            self._ids().select(F.col("id").alias(id_col)), id_col, "left_anti"
+        )
+        return minus_tombstones(novel, self.tombstones, on=id_col)
+
+    def cutover(
+        self, build, *, params: dict | None = None,
+        verb: str = "maintenance rewrite",
+    ) -> int:
+        """Build the next generation and atomically cut the store over
+        to it. Returns the new generation number.
+
+        Protocol (each step's failure mode in brackets):
+
+        1. sweep orphan/stale generations from a previous failed run;
+        2. snapshot every live table's parquet FILE SET [no change];
+        3. ``build(nxt, snapshot)`` writes every table of ``nxt``, the
+           next-generation handle (carrying ``params`` when given);
+           ``snapshot(suffix)`` reads the snapshotted files, a
+           consistent point-in-time view even while appends land
+           [crash: orphan next-gen tables, swept on re-run];
+        4. re-list every live file set; ANY difference means an append
+           raced the build — the half-built generation is dropped and
+           the cutover raises instead of silently losing the append
+           [loud abort, store untouched, appended rows intact];
+        5. flip the meta pointer with ONE append of the next-generation
+           row (:func:`write_meta_row`) [crash before the commit: the
+           store is the old generation, complete; after: the new one];
+        6. :func:`postflip_append_audit` — catches an append that landed
+           entirely inside the re-list -> flip gap;
+        7. drop the old generation [crash: stale tables, swept on the
+           next maintenance run].
+
+        Every append/cutover interleaving raises on at least one side
+        (see :func:`postflip_append_audit`); a writer-free maintenance
+        window remains the operationally clean choice."""
+        spark, name, suffixes = self.spark, self.name, self.spec.suffixes
+        sweep_stale_generations(spark, name, suffixes, self.gen)
+        nxt = replace(
+            self, params=dict(params or self.params), gen=self.gen + 1
+        )
+        snaps = {}
         for s in suffixes:
-            loc, schema, before = snapshots[s]
-            after = _list_files(spark, loc, schema)
-            if after != before:
+            snaps[s] = snapshot_files(spark, self.table(s))
+            if not snaps[s][2] and spark.table(self.table(s)).limit(1).count():
+                # a listing that misses live data would rewrite the
+                # store as EMPTY and drop it
                 raise RuntimeError(
-                    f"store '{name}': table files changed under the "
-                    f"maintenance rewrite ({phys_table(name, s, gen)}) "
-                    "— an append raced the rewrite. The store is "
-                    "untouched (the appended rows are live); re-run "
-                    "the maintenance op in a writer-free window"
+                    f"store '{name}': file enumeration of "
+                    f"'{self.table(s)}' returned no files but the table "
+                    "has rows — refusing to cut over (the snapshot "
+                    "layer cannot see the warehouse files)"
                 )
-    except BaseException:
-        # a failed/raced rewrite may leave any subset of the next-gen
-        # tables (including a half-written one) — clear them all
-        for s in suffixes:
-            clear_table(spark, phys_table(name, s, nxt))
-        raise
 
-    write_meta(nxt)  # THE atomic cutover
-    # the post-flip audit (round 16): catches an append that landed
-    # entirely inside the re-list -> flip gap — the one interleaving
-    # the two checks above cannot see. Raises WITHOUT dropping the
-    # old generation (see postflip_append_audit for the recovery
-    # contract); one extra listing per table, no job.
-    postflip_append_audit(
-        spark,
-        name,
-        [(phys_table(name, s, gen), *snapshots[s]) for s in suffixes],
-        nxt,
-    )
-    # drop the old generation directly (its names are known exactly —
-    # a catalog-wide sweep here would be pure listTables overhead; the
-    # NEXT maintenance run's opening sweep still self-heals any stale
-    # tables a crash right here would leave)
-    for s in suffixes:
-        clear_table(spark, phys_table(name, s, gen))
-    return nxt
+        def snapshot(suffix: str) -> DataFrame:
+            _, schema, files = snaps[suffix]
+            if files:
+                return spark.read.schema(schema).parquet(*sorted(files))
+            return spark.table(self.table(suffix)).limit(0)
+
+        try:
+            build(nxt, snapshot)
+            for s in suffixes:
+                loc, schema, before = snaps[s]
+                if _list_files(spark, loc, schema) != before:
+                    raise RuntimeError(
+                        f"{self.spec.kind} store '{name}': table files "
+                        f"changed under the {verb} ({self.table(s)}) — "
+                        "an append raced it. The store is untouched "
+                        "(the appended rows are live); re-run the "
+                        f"{verb} in a writer-free window (a rebuild "
+                        "with an input that includes those rows)"
+                    )
+        except BaseException:
+            # a failed or raced build may leave any subset of the
+            # next-gen tables, including a half-written one
+            for s in suffixes:
+                clear_table(spark, nxt.table(s))
+            raise
+        self.spec.write_meta(spark, name, nxt.params, nxt.gen)  # THE flip
+        postflip_append_audit(
+            spark, name,
+            [(self.table(s), *snaps[s]) for s in suffixes], nxt.gen,
+        )
+        # the old generation's names are known exactly — no second
+        # catalog-wide sweep
+        for s in suffixes:
+            clear_table(spark, self.table(s))
+        return nxt.gen
+
+    def rebucket(self, new_buckets: int) -> int:
+        """Rewrite every table at ``new_buckets`` (one repartition
+        shuffle per table, which also merges append fragments);
+        contents, parameters and pending tombstones are preserved."""
+        if new_buckets < 1:
+            raise ValueError(f"new_buckets must be >= 1, got {new_buckets}")
+        return self._rewrite({**self.params, "buckets": int(new_buckets)})
+
+    def purge_deleted(self) -> None:
+        """Fold the tombstones into the files (the tables rewritten
+        with them anti-joined away), then clear the tombstone table —
+        AFTER the cutover, so a crash between the two leaves reads
+        correct (anti-joining already-purged ids is a no-op)."""
+        if self.tombstones is None:
+            return
+        # pinned: every table is rewritten against the same id set
+        ts = self.tombstones.localCheckpoint(eager=True)
+        self._rewrite(self.params, anti=ts)
+        clear_table(self.spark, f"{self.name}_tombstones")
+
+    def _rewrite(self, params: dict, anti: DataFrame | None = None) -> int:
+        def build(nxt: Store, snapshot) -> None:
+            frames = {s: snapshot(s) for s in self.spec.suffixes}
+            if anti is not None:
+                frames = {
+                    s: df.join(F.broadcast(anti), "id", "left_anti")
+                    for s, df in frames.items()
+                }
+            nxt.write_tables(frames)
+
+        return self.cutover(build, params=params)
 
 
 def write_meta_row(
@@ -639,73 +627,50 @@ def write_meta_row(
     """Write a store's meta row. The meta table is an APPEND-ONLY log
     (readers resolve the highest-``gen`` row via :func:`read_meta`):
 
-    - ``reset=False`` (a generation cutover) APPENDS the new row.
-      The append is one parquet file-manifest commit — the table is
-      never dropped, so a crash or concurrent read at ANY instant sees
-      either the old current row or the new one, nothing else. This
-      replaces the round-14 ``saveAsTable(mode=overwrite)`` flip, whose
-      DROP+CREATE left a gen>=1 store with NO meta table when the
-      driver died mid-flip (ADVICE r14: readers then resolved
-      generation 0's nonexistent unsuffixed tables and recovery needed
-      a full store rebuild even though both generations' data
-      survived). Cutover rows carry strictly increasing ``gen``, so
-      the max-gen read is unambiguous; a crash-retry that re-appends
-      the same row is idempotent (identical rows tie harmlessly).
+    - ``reset=False`` (a generation cutover) APPENDS the new row. The
+      append is one parquet file-manifest commit — the table is never
+      dropped, so a crash or concurrent read at ANY instant sees either
+      the old current row or the new one, nothing else. Cutover rows
+      carry strictly increasing ``gen``, so the max-gen read is
+      unambiguous; a crash-retry that re-appends the same row is
+      idempotent (identical rows tie harmlessly).
     - ``reset=True`` (a FRESH store write, generation 0) clears the
       table and starts a new log — the old log's high-gen rows must
       not outrank the new store's gen-0 row. A fresh write is the one
       documented non-atomic window (the store's data tables are being
       rebuilt from scratch around it anyway).
 
-    A legacy meta whose schema predates this build's row shape cannot
-    be appended to; its first cutover rewrites the log in place (the
-    same one-off non-atomic upgrade any schema migration needs).
-
     Log growth: one tiny row (and one parquet file) per cutover —
-    bounded by maintenance frequency, not data size; ``read_meta``
-    collects the whole log, so even a store purged hourly for a year
-    reads back ~10^4 scalar rows, driver-side noise. A store that ever
-    wants the history gone gets it for free at the next fresh write
-    (reset).
+    bounded by maintenance frequency, not data size; even a store
+    purged hourly for a year reads back ~10^4 scalar rows.
 
-    Concurrent MAINTENANCE ops are detected here (ADVICE r15): two
-    racing cutovers (say a purge and a rebucket) would each append a
-    row at the same target ``gen`` with different buckets/params;
-    max-gen resolution would then pick an arbitrary winner whose
-    next-gen tables the loser's cleanup may have swept. Before the
-    append, the log is checked for a pre-existing row at the new
-    row's ``gen``: a DIFFERENT row there aborts loudly (the store
-    pointer is untouched — the earlier cutover won); an IDENTICAL row
-    is a crash-retry of the same cutover and appends harmlessly
-    (identical rows tie). Maintenance ops therefore never need an
-    external lock to be safe against each other — the loser of the
-    race gets an exception instead of a corrupted pointer.
+    Concurrent MAINTENANCE ops are detected here: two racing cutovers
+    would each append a row at the same target ``gen``, and max-gen
+    resolution would pick an arbitrary winner whose next-gen tables
+    the loser's cleanup may have swept. A DIFFERENT row already at the
+    new row's ``gen`` aborts loudly (the store pointer is untouched —
+    the earlier cutover won); an IDENTICAL row is a crash-retry of the
+    same cutover and appends harmlessly. Maintenance ops therefore
+    need no external lock to be safe against each other.
     """
-    exists = spark.catalog.tableExists(table)
-    if reset or not exists:
+    if reset or not spark.catalog.tableExists(table):
         clear_table(spark, table)
         df.write.format("parquet").mode("overwrite").saveAsTable(table)
         return
-    if set(spark.table(table).columns) != set(df.columns):
-        df.write.format("parquet").mode("overwrite").saveAsTable(table)
-        return
-    if "gen" in df.columns:
-        new_rows = df.collect()  # 1 tiny local row per cutover
-        gens = sorted({int(r["gen"]) for r in new_rows if r["gen"] is not None})
-        if gens:
-            cols = sorted(df.columns)
-            clash = spark.table(table).where(F.col("gen").isin(gens)).collect()
-            new_set = {tuple(r[c] for c in cols) for r in new_rows}
-            diff = [r for r in clash if tuple(r[c] for c in cols) not in new_set]
-            if diff:
-                raise RuntimeError(
-                    f"meta log '{table}': a different row already exists at "
-                    f"generation {gens} — a concurrent maintenance op won the "
-                    "cutover race. This op's next-gen tables may have been "
-                    "swept; the store pointer is untouched. Re-run this "
-                    "maintenance op alone (maintenance ops are mutually "
-                    "exclusive per store)"
-                )
+    new_rows = df.collect()  # 1 tiny local row per cutover
+    gens = sorted({int(r["gen"]) for r in new_rows})
+    cols = sorted(df.columns)
+    new_set = {tuple(r[c] for c in cols) for r in new_rows}
+    clash = spark.table(table).where(F.col("gen").isin(gens)).collect()
+    if any(tuple(r[c] for c in cols) not in new_set for r in clash):
+        raise RuntimeError(
+            f"meta log '{table}': a different row already exists at "
+            f"generation {gens} — a concurrent maintenance op won the "
+            "cutover race. This op's next-gen tables may have been "
+            "swept; the store pointer is untouched. Re-run this "
+            "maintenance op alone (maintenance ops are mutually "
+            "exclusive per store)"
+        )
     df.write.format("parquet").mode("append").saveAsTable(table)
 
 
@@ -716,16 +681,13 @@ def check_generation_unchanged(
     the append: the append resolved its physical tables from the meta
     generation at call start; if maintenance flipped the pointer while
     the append was writing, the appended rows were either CARRIED into
-    the new generation (the rewrite's file snapshot ran after the
+    the new generation (the cutover's file snapshot ran after the
     writes) or DROPPED with the old one (snapshot before). The append
     cannot tell which, so it raises conservatively; re-running it is
     safe in both worlds — the id-clash probe reports already-exists
     when the rows were carried, and re-ingests them when they were
-    lost (the bands-first write order plus candidate-pair dedup make
-    even a partially-carried shard re-appendable). The maintenance
-    side independently aborts when files appear under its snapshot,
-    so between the two checks a racing append is aborted-against,
-    detected here, or both."""
+    lost (the append order plus candidate-pair dedup make even a
+    partially-carried shard re-appendable)."""
     now = store_generation(spark, name)
     if now != gen_at_start:
         raise RuntimeError(

@@ -21,10 +21,11 @@ Crash-window ordering: bands are appended FIRST, shingles LAST, and
 novelty is decided on the SHINGLES table. A failure between the two
 writes leaves band rows whose ids are still "novel"; the redelivered
 batch re-appends them — duplicate BAND rows are harmless
-(``pairs_from_store`` dropDuplicates the candidate pairs and
-compaction rewrites files), while duplicate SHINGLE rows would
-double-count every verified pair, which this ordering makes
-impossible.
+(``pairs_from_store`` dropDuplicates the candidate pairs, and the next
+rebucket or purge rewrites the files), while duplicate SHINGLE rows
+would double-count every verified pair, which this ordering makes
+impossible. The store core (``sources/bucketing.py``) owns that
+append order for both stores.
 """
 
 from __future__ import annotations
@@ -68,17 +69,11 @@ def minhash_ingest_batch(
     the crawl — are dropped, so the sink is idempotent under
     at-least-once delivery.
     """
-    from polars_text_spark.operators.dedup import _banded_signatures
-    from polars_text_spark.operators.dedup import token_shingles
     from polars_text_spark.operators.dedup_store import (
-        _minhash_meta,
+        MINHASH_STORE,
+        _append_rows,
+        _assert_hash_family,
         write_minhash_store,
-    )
-    from polars_text_spark.sources.bucketing import (
-        check_generation_unchanged,
-        phys_table,
-        read_tombstones,
-        write_bucketed,
     )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -92,12 +87,12 @@ def minhash_ingest_batch(
             # overwrites standing rows)
             .dropDuplicates([id_col])
         )
-        # bootstrap gate = the META table, which write_minhash_store
-        # writes LAST: a crash mid-bootstrap leaves no meta, so the
+        # bootstrap gate = the META row, which the store core writes
+        # LAST: a crash mid-bootstrap leaves no meta, so the
         # redelivered first batch re-bootstraps over the partial
         # tables instead of trusting them
-        meta = _minhash_meta(spark, name)
-        if meta is None:
+        store = MINHASH_STORE.open(spark, name, required=False)
+        if store is None:
             write_minhash_store(
                 batch,
                 name,
@@ -109,72 +104,16 @@ def minhash_ingest_batch(
                 buckets=buckets,
             )
             return
-        # params AND the current generation come from the ONE meta
-        # read above (round 16); a maintenance cutover racing this
-        # batch is detected by the post-write generation check below
-        m_perm, m_bands, m_shingle, m_buckets, gen_at_start = meta
-        bands_tbl = phys_table(name, "bands", gen_at_start)
-        shingles_tbl = phys_table(name, "shingles", gen_at_start)
-        # novelty: the shard probes the id-bucketed shingles table
-        # (shuffle-free on the store side, nothing store-sized
-        # broadcast) plus the pending-tombstone set — a tombstoned id
-        # would be silently swallowed by the read-time anti-join, so
-        # it is NOT novel until purged
-        standing = spark.table(shingles_tbl).select("id")
-        novel = batch.join(
-            standing.withColumnRenamed("id", id_col), id_col, "left_anti"
-        )
-        ts = read_tombstones(spark, name)
-        if ts is not None:
-            novel = novel.join(
-                F.broadcast(ts.withColumnRenamed("id", id_col)),
-                id_col,
-                "left_anti",
-            )
-        # materialize: (a) one pass over the batch text for both
-        # projections, (b) the shingles append below must not re-read
-        # the shingles table its own plan anti-joined against
-        novel = novel.localCheckpoint(eager=True)
-        if not novel.take(1):
-            return
-        band_cols = [
-            "id",
-            F.col("bk.band").alias("band"),
-            F.col("bk.bucket").alias("bucket"),
-        ]
-        if "sig" in spark.table(bands_tbl).columns:
-            # the hot-band guard's signature-group key; stores written
-            # before it existed keep their narrower schema
-            band_cols.append(F.col("__sig").alias("sig"))
-        banded = _banded_signatures(
-            novel, text_col, id_col, "id",
-            num_perm=m_perm, bands=m_bands, shingle_n=m_shingle,
-        ).select(*band_cols)
-        write_bucketed(
-            banded,
-            bands_tbl,
-            bucket_by=["band", "bucket"],
-            buckets=m_buckets,
-            sort_by=["band", "bucket"],
-            mode="append",
-        )
-        shingles = novel.select(
-            F.col(id_col).alias("id"),
-            token_shingles(text_col, m_shingle, hashed=True).alias("sh"),
-        )
-        write_bucketed(
-            shingles,
-            shingles_tbl,
-            bucket_by="id",
-            buckets=m_buckets,
-            sort_by="id",
-            mode="append",
-        )
-        # a cutover racing this trigger dropped the generation these
-        # rows landed in: fail the batch LOUDLY so the stream retries
-        # it against the new generation (novelty anti-join makes the
-        # redelivery exact)
-        check_generation_unchanged(spark, name, gen_at_start)
+        # params, generation and tombstones come from the ONE open
+        # above; a maintenance cutover racing this batch fails it
+        # LOUDLY in the append's post-write generation check, and the
+        # stream's retry is exact against the new generation
+        _assert_hash_family(name, store.params)
+        # materialize: the append below must not re-read the shingles
+        # table its own novelty plan anti-joined against
+        novel = store.novel(batch, id_col).localCheckpoint(eager=True)
+        if novel.take(1):
+            _append_rows(store, novel, text_col, id_col)
 
     return ingest
 
@@ -239,15 +178,9 @@ def ann_ingest_batch(
     wrong-dim drop would null-pad into degenerate band keys: silent
     recall 0)."""
     from polars_text_spark.operators.ann_store import (
-        _shard_projections,
-        _store_meta,
+        ANN_STORE,
+        _append_rows,
         write_ann_store,
-    )
-    from polars_text_spark.sources.bucketing import (
-        check_generation_unchanged,
-        phys_table,
-        read_tombstones,
-        write_bucketed,
     )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -256,7 +189,8 @@ def ann_ingest_batch(
             batch_df.filter(F.col(vec_col).isNotNull())
             .dropDuplicates([id_col])
         )
-        if not spark.catalog.tableExists(f"{name}_meta"):
+        store = ANN_STORE.open(spark, name, required=False)
+        if store is None:
             write_ann_store(
                 batch,
                 name,
@@ -268,58 +202,12 @@ def ann_ingest_batch(
                 buckets=buckets,
             )
             return
-        # ONE meta read resolves params AND the current generation
-        # (round 16); the post-write check below catches a racing
-        # maintenance cutover. Dimensionality is guarded in-plan by
-        # sha_band_keys — a wrong-dim batch aborts its own write job
-        # instead of paying a pre-flight scan per trigger.
-        m_dim, m_planes, m_bands, m_buckets, gen_at_start = _store_meta(
-            spark, name
-        )
-        bands_tbl = phys_table(name, "bands", gen_at_start)
-        vectors_tbl = phys_table(name, "vectors", gen_at_start)
-        standing = spark.table(vectors_tbl).select("id")
-        novel = batch.join(
-            standing.withColumnRenamed("id", id_col), id_col, "left_anti"
-        )
-        ts = read_tombstones(spark, name)
-        if ts is not None:
-            novel = novel.join(
-                F.broadcast(ts.withColumnRenamed("id", id_col)),
-                id_col,
-                "left_anti",
-            )
-        novel = novel.localCheckpoint(eager=True)
-        if not novel.take(1):
-            return
-        banded, unit = _shard_projections(
-            novel,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=m_dim,
-            num_planes=m_planes,
-            bands=m_bands,
-        )
-        write_bucketed(
-            banded,
-            bands_tbl,
-            bucket_by="band_key",
-            buckets=m_buckets,
-            sort_by="band_key",
-            mode="append",
-        )
-        write_bucketed(
-            unit,
-            vectors_tbl,
-            bucket_by="id",
-            buckets=m_buckets,
-            sort_by="id",
-            mode="append",
-        )
-        # fail the batch LOUDLY if a maintenance cutover dropped the
-        # generation these rows landed in; the stream's retry is exact
-        # (novelty anti-join) against the new generation
-        check_generation_unchanged(spark, name, gen_at_start)
+        # a wrong-dim batch aborts its own write job (in-plan guard in
+        # sha_band_keys); a racing cutover fails the batch in the
+        # append's post-write generation check
+        novel = store.novel(batch, id_col).localCheckpoint(eager=True)
+        if novel.take(1):
+            _append_rows(store, novel, id_col, vec_col)
 
     return ingest
 
@@ -669,13 +557,14 @@ def bloom_ingest_batch(
     rebuilds remains the operationally clean choice.
     """
     from polars_text_spark.operators.bloom import (
-        append_bloom_shard,
+        BLOOM_STORE,
+        _append,
         write_bloom_store,
     )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if not spark.catalog.tableExists(f"{name}_meta"):
+        store = BLOOM_STORE.open(batch_df.sparkSession, name, required=False)
+        if store is None:
             write_bloom_store(
                 batch_df,
                 key_col,
@@ -685,7 +574,7 @@ def bloom_ingest_batch(
                 seed=seed,
             )
         else:
-            append_bloom_shard(batch_df, key_col, name)
+            _append(store, batch_df, key_col)
 
     return ingest
 

@@ -4,7 +4,7 @@ Times every step of ann_store_delete / ann_store_incremental /
 ann_store_rebucket / minhash lifecycle queries and, via lightweight
 wrappers around the bucketing-layer helpers, accumulates call counts +
 wall time of the catalog/meta primitives (DESCRIBE, meta collect,
-tableExists, clear_table, write_bucketed, file listings) so we can see
+tableExists, clear_table, write_bucketed, file snapshots and listings) so we can see
 where the fixed orchestration cost actually goes (guide §1: measure
 first). Usage:
 
@@ -51,14 +51,13 @@ def main() -> None:
     import polars_text_spark.sources.bucketing as bk
 
     for attr in (
-        "_describe",
+        "snapshot_files",
         "read_meta",
         "clear_table",
         "write_bucketed",
         "_list_files",
         "sweep_stale_generations",
         "write_meta_row",
-        "probe_id_clash",
         "tombstone_ids",
     ):
         _wrap(bk, attr)

@@ -197,13 +197,15 @@ def test_topk_against_shard_store_side_shuffle_free(spark, vectors, no_broadcast
     assert plan.count("Bucketed: true") == 2, plan
 
 
-def test_compact_store_merges_append_fragments(spark, vectors, no_broadcast):
-    """Three appends fragment the bucket files; compaction merges them
-    to one file per bucket, preserves every row, and keeps the
-    co-located (Bucketed: true) scan."""
-    import pyspark.sql.functions as F  # noqa: F811
+def test_rebucket_merges_append_fragments(spark, vectors, no_broadcast):
+    """Three appends fragment the bucket files; a rebucket at the
+    CURRENT count (the atomic compaction) merges them to one file per
+    bucket, preserves every row, and keeps the co-located
+    (Bucketed: true) scan."""
+    import glob
+    import os
 
-    from polars_text_spark.sources.bucketing import compact_table
+    from polars_text_spark.operators.ann_store import ANN_STORE, rebucket_store
 
     base = vectors.filter(F.col("vec_id") % 4 == 1)
     write_ann_store(base, "ann_store_c", dim=64, buckets=4)
@@ -213,21 +215,21 @@ def test_compact_store_merges_append_fragments(spark, vectors, no_broadcast):
         (r.id, tuple(r.u))
         for r in read_bucketed(spark, "ann_store_c_vectors").collect()
     }
-    import glob
-    import os
-
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    loc = os.path.join(warehouse, "ann_store_c_vectors")
-    n_before = len(glob.glob(f"{loc}/*.parquet"))
-    n_after = compact_table(spark, "ann_store_c_vectors")
+
+    def n_files(table):
+        return len(glob.glob(f"{os.path.join(warehouse, table)}/*.parquet"))
+
+    n_before = n_files("ann_store_c_vectors")
+    rebucket_store(spark, "ann_store_c", 4)
+    vectors_tbl = ANN_STORE.open(spark, "ann_store_c").table("vectors")
+    n_after = n_files(vectors_tbl)
     assert n_after < n_before
     assert n_after <= 4  # one file per bucket
     after = {
-        (r.id, tuple(r.u))
-        for r in read_bucketed(spark, "ann_store_c_vectors").collect()
+        (r.id, tuple(r.u)) for r in read_bucketed(spark, vectors_tbl).collect()
     }
     assert after == before
-    compact_table(spark, "ann_store_c_bands")
     # compacted store still answers shuffle-free on the store side
     qs = vectors.filter(F.col("vec_id") < 3)
     plan = explain_str(
@@ -235,17 +237,6 @@ def test_compact_store_merges_append_fragments(spark, vectors, no_broadcast):
     )
     assert plan.count("Bucketed: true") == 2, plan
     assert plan.count("Exchange") == 4, plan
-
-
-def test_compact_rejects_unbucketed_table(spark):
-    import pytest as _pytest
-
-    from polars_text_spark.sources.bucketing import clear_table, compact_table
-
-    clear_table(spark, "plain_tbl")
-    spark.range(10).write.format("parquet").saveAsTable("plain_tbl")
-    with _pytest.raises(ValueError, match="not bucketed"):
-        compact_table(spark, "plain_tbl")
 
 
 def test_append_rejects_dim_mismatch(spark, vectors):
@@ -345,12 +336,10 @@ def test_ann_purge_then_reappend(spark, vectors):
         append_ann_shard(shard, "ann_pg")
     purge_deleted(spark, "ann_pg")
     assert not spark.catalog.tableExists("ann_pg_tombstones")
-    from polars_text_spark.operators.ann_store import _phys
+    from polars_text_spark.operators.ann_store import ANN_STORE
 
-    remaining = {
-        r.id
-        for r in read_bucketed(spark, _phys(spark, "ann_pg", "vectors")).collect()
-    }
+    vectors_tbl = ANN_STORE.open(spark, "ann_pg").table("vectors")
+    remaining = {r.id for r in read_bucketed(spark, vectors_tbl).collect()}
     assert remaining == set(range(5, 40))
     # after purge the ids are free again; a query identical to the
     # re-appended vector shares ALL its band keys, so it must surface
@@ -447,9 +436,10 @@ def test_rebucket_store_preserves_answers_and_meta(spark, vectors):
 
     meta = read_meta(spark, "ann_rb")  # max-gen row of the meta log
     assert meta["buckets"] == 8
-    from polars_text_spark.operators.ann_store import _phys
+    from polars_text_spark.operators.ann_store import ANN_STORE
 
-    for tbl in (_phys(spark, "ann_rb", "bands"), _phys(spark, "ann_rb", "vectors")):
+    store = ANN_STORE.open(spark, "ann_rb")
+    for tbl in (store.table("bands"), store.table("vectors")):
         info = {
             r["col_name"]: r["data_type"]
             for r in spark.sql(f"DESCRIBE EXTENDED {tbl}").collect()

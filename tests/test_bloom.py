@@ -219,7 +219,7 @@ def test_bloom_rebuild_resizes(spark):
     """Passing new parameters resizes the filter during the rebuild —
     the one legal moment (bits cannot carry across sizes)."""
     from polars_text_spark.operators.bloom import (
-        _bloom_meta,
+        BLOOM_STORE,
         read_bloom_store,
         rebuild_bloom_store,
         write_bloom_store,
@@ -228,8 +228,10 @@ def test_bloom_rebuild_resizes(spark):
     base = spark.createDataFrame([(f"rs-{i}",) for i in range(100)], ["k"])
     write_bloom_store(base, "k", "bloomrs_t", m_bits=1024, n_hashes=3)
     rebuild_bloom_store(spark, base, "k", "bloomrs_t", m_bits=16384)
-    m_bits, n_hashes, seed, gen = _bloom_meta(spark, "bloomrs_t")
-    assert (m_bits, n_hashes, gen) == (16384, 3, 1)
+    store = BLOOM_STORE.open(spark, "bloomrs_t")
+    assert (store.params["m_bits"], store.params["n_hashes"], store.gen) == (
+        16384, 3, 1
+    )
     merged = read_bloom_store(spark, "bloomrs_t")
     direct = bloom_fit(base, "k", m_bits=16384, n_hashes=3)
     assert merged.first()[0] == direct.first()[0]

@@ -125,6 +125,22 @@ def test_huge_ids_sum_convergence_exact(spark):
     }
 
 
+def test_fractional_decimal_ids_changed_count_probe(spark):
+    """Fractional decimal ids must NOT use the label-sum probe: the
+    decimal(38,0) cast rounds 1.4, 1.3, 1.2 and 1.1 all to 1, so the
+    first round's label moves leave the sum unchanged and the probe
+    would declare a 4-chain converged half-merged (1.4 labelled 1.3).
+    Scale > 0 falls back to the exact changed-count probe."""
+    from decimal import Decimal
+
+    ids = [Decimal(v) for v in ("1.4", "1.3", "1.2", "1.1")]
+    pairs = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "id_a decimal(10,1), id_b decimal(10,1)"
+    )
+    got = _comp_map(connected_components(pairs))
+    assert got == {v: Decimal("1.1") for v in ids}
+
+
 def test_string_ids_changed_count_probe(spark):
     """Round-17 (ADVICE r16): string vertex ids must NOT use the
     decimal label-sum probe (the cast nulls out under ANSI-off and the

@@ -436,43 +436,6 @@ def test_source_matrix_no_warning_below_cap(spark, corpus):
     assert cells[("hot", "hot")] == HOT_N * (HOT_N - 1) // 2
 
 
-def test_legacy_sig_less_store_warns_when_guard_engages(spark, corpus):
-    """A store written before the sig column falls back to arbitrary-
-    hub stars — pairs_from_store / incremental_pairs_from_store must
-    warn so the recall exposure is visible (ADVICE r12)."""
-    import warnings
-
-    write_minhash_store(corpus, "mh_legacy", buckets=4)
-    # simulate a pre-sig store: rewrite the band table without sig
-    # (checkpointed — the overwrite drops the files the lazy read needs)
-    legacy = spark.table("mh_legacy_bands").drop("sig").localCheckpoint(
-        eager=True
-    )
-    from polars_text_spark.sources.bucketing import write_bucketed
-
-    write_bucketed(
-        legacy, "mh_legacy_bands",
-        bucket_by=["band", "bucket"], buckets=4,
-        sort_by=["band", "bucket"],
-    )
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        pairs_from_store(spark, "mh_legacy", band_cap=8)
-    assert any("arbitrary hub" in str(w.message) for w in rec)
-    shard = spark.createDataFrame(
-        [(9000, HOT_TEXT)], "doc_id long, text string"
-    )
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        incremental_pairs_from_store(spark, "mh_legacy", shard, band_cap=8)
-    assert any("arbitrary hub" in str(w.message) for w in rec)
-    # band_cap=None keeps exact semantics and stays silent
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        pairs_from_store(spark, "mh_legacy", band_cap=None)
-    assert not [w for w in rec if "arbitrary hub" in str(w.message)]
-
-
 # ---------------------------------------------------------------------------
 # Round 13 (VERDICT r12 #5): band-cap recall telemetry.
 # ---------------------------------------------------------------------------
@@ -542,7 +505,8 @@ def test_band_stats_telemetry_zero_when_unsaturated_or_uncapped(spark):
 
 def test_band_stats_telemetry_null_without_sig(spark):
     """No signature column -> the cross-sig accounting is UNKNOWN
-    (null), never silently zero — the pre-sig-store stance."""
+    (null), never silently zero — the stance for the ANN store's
+    sig-less band table."""
     from polars_text_spark.operators.dedup import band_bucket_stats
 
     banded = spark.createDataFrame(

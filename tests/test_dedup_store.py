@@ -158,12 +158,10 @@ def test_purge_deleted_physically_removes_and_clears(spark, corpus):
     key = lambda rows: {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in rows}
     assert key(after) == key(logical)  # purge changes nothing logically
     # physical removal: no tombstoned id anywhere in either table
-    from polars_text_spark.operators.dedup_store import _phys
+    from polars_text_spark.operators.dedup_store import MINHASH_STORE
 
-    for t in (
-        _phys(spark, "mh_store_pg", "bands"),
-        _phys(spark, "mh_store_pg", "shingles"),
-    ):
+    store = MINHASH_STORE.open(spark, "mh_store_pg")
+    for t in (store.table("bands"), store.table("shingles")):
         # the generational purge cut the store over to a NEW physical
         # generation (round 14)
         assert t.endswith("_g1"), t
@@ -294,9 +292,10 @@ def test_rebucket_minhash_store_preserves_pairs(spark, corpus):
 
     meta = read_meta(spark, "mh_rb")  # max-gen row of the meta log
     assert meta["buckets"] == 8
-    from polars_text_spark.operators.dedup_store import _phys
+    from polars_text_spark.operators.dedup_store import MINHASH_STORE
 
-    for tbl in (_phys(spark, "mh_rb", "bands"), _phys(spark, "mh_rb", "shingles")):
+    store = MINHASH_STORE.open(spark, "mh_rb")
+    for tbl in (store.table("bands"), store.table("shingles")):
         info = {
             r["col_name"]: r["data_type"]
             for r in spark.sql(f"DESCRIBE EXTENDED {tbl}").collect()
@@ -361,19 +360,16 @@ def test_store_rejects_mismatched_shingle_hash_family(spark, corpus):
     collide — silent recall 0), while self-contained reads stay
     valid; rebucket preserves the recorded family."""
     from polars_text_spark.operators.dedup_store import (
+        MINHASH_STORE,
         append_minhash_shard,
         rebucket_minhash_store,
     )
 
     write_minhash_store(corpus, "mh_hashv", buckets=4)
-    # simulate a v1-era store: rewrite the meta with hashv=1
-    old = spark.table("mh_hashv_meta").collect()[0]
-    spark.createDataFrame(
-        [(old["num_perm"], old["bands"], old["shingle_n"],
-          old["buckets"], 1)],
-        "num_perm int, bands int, shingle_n int, buckets int, hashv int",
-    ).write.format("parquet").mode("overwrite").saveAsTable(
-        "mh_hashv_meta"
+    # simulate a v1-era store: restart the meta log with hashv=1
+    params = MINHASH_STORE.open(spark, "mh_hashv").params
+    MINHASH_STORE.write_meta(
+        spark, "mh_hashv", {**params, "hashv": 1}, 0, reset=True
     )
     shard = spark.createDataFrame(
         [(9000, "totally novel shard text content")],
@@ -389,21 +385,17 @@ def test_store_rejects_mismatched_shingle_hash_family(spark, corpus):
     ).count() >= 0
     # rebucket must NOT stamp the current version onto the old store
     rebucket_minhash_store(spark, "mh_hashv", 8)
-    assert spark.table("mh_hashv_meta").collect()[0]["hashv"] == 1
+    assert {r["hashv"] for r in spark.table("mh_hashv_meta").collect()} == {1}
     with pytest.raises(ValueError, match="hash family"):
         append_minhash_shard(shard, "mh_hashv")
 
 
 def test_meta_less_store_refuses_incremental_banding(spark, corpus):
     """A store whose band/shingle tables exist but whose meta table
-    does NOT is by definition a pre-meta (v1 string-shingle family)
-    store: banding v2-hashed text against it can never collide —
-    silent recall 0 — so the incremental path must raise instead of
-    returning silently (ADVICE r13 medium)."""
-    from polars_text_spark.operators.dedup_store import (
-        _assert_hash_family,
-        append_minhash_shard,
-    )
+    does NOT has no recorded parameters or hash family: banding new
+    text against it could never be checked, so both incremental paths
+    refuse it loudly, naming the missing meta table."""
+    from polars_text_spark.operators.dedup_store import append_minhash_shard
     from polars_text_spark.sources.bucketing import clear_table
 
     write_minhash_store(corpus.limit(50), "mh_nometa", buckets=4)
@@ -411,16 +403,10 @@ def test_meta_less_store_refuses_incremental_banding(spark, corpus):
     shard = spark.createDataFrame(
         [(9001, "some brand new shard text")], "doc_id long, text string"
     )
-    with pytest.raises(ValueError, match="v1"):
-        _assert_hash_family(spark, "mh_nometa")
-    with pytest.raises(ValueError, match="v1|meta"):
+    with pytest.raises(ValueError, match="no meta table"):
         incremental_pairs_from_store(spark, "mh_nometa", shard).collect()
-    # the append path already raised on the missing meta; still loud
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="no meta table"):
         append_minhash_shard(shard, "mh_nometa")
-    # a store that does not exist at all stays a no-op (the caller's
-    # own read raises the missing-table error)
-    _assert_hash_family(spark, "mh_never_written")
 
 
 def test_store_write_signature_derivation_is_exchange_free(spark, corpus):

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 import polars_text_spark.sources.bucketing as bucketing
 from polars_text_spark.operators.dedup import minhash_lsh_pairs
 from polars_text_spark.operators.dedup_store import (
-    _phys,
+    MINHASH_STORE,
     append_minhash_shard,
     delete_ids,
     incremental_pairs_from_store,
@@ -106,14 +106,13 @@ def test_append_racing_a_cutover_raises_loudly(spark, corpus, monkeypatch):
     reports already-exists when the rows were carried, and re-ingests
     them when they were lost (bands-first write order + candidate
     dedup make a partially-carried shard re-appendable too)."""
-    import polars_text_spark.operators.dedup_store as ds
-
     base = corpus.filter(F.col("doc_id") % 4 != 0)
     shard = corpus.filter(F.col("doc_id") % 4 == 0).limit(10)
     write_minhash_store(base, "mh_race2", buckets=4)
 
-    # patch the APPEND's binding (dedup_store imports write_bucketed
-    # by name); the rebucket inside uses bucketing's own, unpatched
+    # every store write goes through bucketing.write_bucketed; only
+    # the APPEND's writes carry mode="append", so the rebucket fired
+    # from inside passes straight through
     real_write = bucketing.write_bucketed
     state = {"appends": 0}
 
@@ -124,10 +123,10 @@ def test_append_racing_a_cutover_raises_loudly(spark, corpus, monkeypatch):
             if state["appends"] == 2:  # after the append's LAST write
                 rebucket_minhash_store(spark, "mh_race2", 8)
 
-    monkeypatch.setattr(ds, "write_bucketed", racing_write)
+    monkeypatch.setattr(bucketing, "write_bucketed", racing_write)
     with pytest.raises(RuntimeError, match="raced this append"):
         append_minhash_shard(shard, "mh_race2")
-    monkeypatch.setattr(ds, "write_bucketed", real_write)
+    monkeypatch.setattr(bucketing, "write_bucketed", real_write)
     assert state["appends"] == 2
 
     # the cutover won; its snapshot ran AFTER both append writes, so
@@ -248,11 +247,14 @@ def test_phys_resolution_and_reads_after_cutover(spark, corpus):
     """Every read path resolves the meta pointer: after a rebucket the
     unsuffixed tables are GONE and reads still answer (the old
     hardcoded-name behavior would throw TABLE_OR_VIEW_NOT_FOUND)."""
+    def bands_table():
+        return MINHASH_STORE.open(spark, "mh_res").table("bands")
+
     write_minhash_store(corpus.limit(60), "mh_res", buckets=2)
-    assert _phys(spark, "mh_res", "bands") == "mh_res_bands"
+    assert bands_table() == "mh_res_bands"
     before = _pairs(spark, "mh_res")
     rebucket_minhash_store(spark, "mh_res", 4)
-    assert _phys(spark, "mh_res", "bands") == "mh_res_bands_g1"
+    assert bands_table() == "mh_res_bands_g1"
     assert not spark.catalog.tableExists("mh_res_bands")
     assert _pairs(spark, "mh_res") == before
     # a fresh write of the same name sweeps every generation back to 0
@@ -280,17 +282,15 @@ def test_append_racing_a_rebuild_aborts_loudly(spark, corpus, monkeypatch):
     """ADVICE r14: rebuild_minhash_store derives the next generation
     from corpus_df, NOT from the live files — an append completing
     during the (long) re-derivation window is in the old tables but
-    not in the corpus, so a silent flip would drop it. The round-15
-    file-snapshot re-list turns that into the same loud abort
-    rewrite_generation gives rebucket/purge: store untouched, appended
-    rows live, retry with a corpus that includes them succeeds."""
-    import polars_text_spark.operators.dedup_store as ds
-
+    not in the corpus, so a silent flip would drop it. The cutover's
+    file-snapshot re-list (the same one rebucket/purge run) turns that
+    into a loud abort: store untouched, appended rows live, retry with
+    a corpus that includes them succeeds."""
     base = corpus.filter(F.col("doc_id") % 4 != 0)
     shard = corpus.filter(F.col("doc_id") % 4 == 0).limit(10)
     write_minhash_store(base, "mh_rbr", buckets=4)
 
-    real_write = ds.write_bucketed
+    real_write = bucketing.write_bucketed
     state = {"injected": False}
 
     def racing_write(df, table, **kw):
@@ -299,14 +299,14 @@ def test_append_racing_a_rebuild_aborts_loudly(spark, corpus, monkeypatch):
         # land an append into the live (old-gen) store
         if table.endswith("_g1") and not state["injected"]:
             state["injected"] = True
-            monkeypatch.setattr(ds, "write_bucketed", real_write)
+            monkeypatch.setattr(bucketing, "write_bucketed", real_write)
             append_minhash_shard(shard, "mh_rbr")
-            monkeypatch.setattr(ds, "write_bucketed", racing_write)
+            monkeypatch.setattr(bucketing, "write_bucketed", racing_write)
 
-    monkeypatch.setattr(ds, "write_bucketed", racing_write)
+    monkeypatch.setattr(bucketing, "write_bucketed", racing_write)
     with pytest.raises(RuntimeError, match="changed under the rebuild"):
         rebuild_minhash_store(spark, "mh_rbr", base)
-    monkeypatch.setattr(ds, "write_bucketed", real_write)
+    monkeypatch.setattr(bucketing, "write_bucketed", real_write)
 
     assert state["injected"]
     # store untouched: generation 0, half-built next gen swept
@@ -362,9 +362,8 @@ def test_meta_log_append_only_flip(spark, corpus):
 def test_meta_log_long_history_resolution(spark):
     """VERDICT r15 #6: ``read_meta`` collects the whole append-only
     log and takes max(gen) — exercise that under a long maintenance
-    history (~200 cutover rows, hourly purges for weeks) with one
-    legacy pre-gen-column row (gen NULL, sorts as generation 0) mixed
-    in, then the documented reset-on-fresh compaction."""
+    history (~200 cutover rows, hourly purges for weeks), then the
+    documented reset-on-fresh compaction."""
     from polars_text_spark.sources.bucketing import (
         clear_table,
         read_meta,
@@ -382,11 +381,6 @@ def test_meta_log_long_history_resolution(spark):
     spark.createDataFrame(hist, "buckets int, gen int").coalesce(
         1
     ).write.format("parquet").mode("append").saveAsTable(table)
-    # one legacy row predating the gen column — reads as generation 0,
-    # outranked by every real cutover row
-    spark.createDataFrame(
-        [(999, None)], "buckets int, gen int"
-    ).write.format("parquet").mode("append").saveAsTable(table)
     m = read_meta(spark, name)
     assert m["gen"] == 199 and m["buckets"] == 299
     # two real per-cutover appends on top of the long history
@@ -396,7 +390,7 @@ def test_meta_log_long_history_resolution(spark):
             spark.createDataFrame([(100 + nxt, nxt)], "buckets int, gen int"),
             table,
         )
-    assert spark.table(table).count() == 203
+    assert spark.table(table).count() == 202
     m = read_meta(spark, name)
     assert m["gen"] == 201 and m["buckets"] == 301
     # reset-on-fresh: the log compacts to ONE gen-0 row — stale
@@ -453,18 +447,16 @@ def test_postflip_audit_catches_gap_append(spark, corpus, monkeypatch):
     must catch it: raise loudly, leave the cutover committed at the
     new generation, PRESERVE the old generation, and allow the raced
     append to be safely re-run against the new generation."""
-    import polars_text_spark.operators.dedup_store as ds
-
     base = corpus.filter(F.col("doc_id") % 4 != 0)
     shard = corpus.filter(F.col("doc_id") % 4 == 0).limit(15)
     write_minhash_store(base, "mh_gap", buckets=4)
     before = _pairs(spark, "mh_gap")
 
-    real_write_meta_row = ds.write_meta_row
+    real_write_meta_row = bucketing.write_meta_row
     state = {"fired": False}
 
     def gap_append_then_flip(spark_, df, table, **kw):
-        # fires as the rewrite's write_meta callback runs — i.e.
+        # fires as the cutover's meta flip runs — i.e.
         # AFTER the pre-flip re-list passed; the append completes
         # before the flip, so its own generation check passes too
         if table == "mh_gap_meta" and not state["fired"]:
@@ -472,10 +464,10 @@ def test_postflip_audit_catches_gap_append(spark, corpus, monkeypatch):
             append_minhash_shard(shard, "mh_gap")
         return real_write_meta_row(spark_, df, table, **kw)
 
-    monkeypatch.setattr(ds, "write_meta_row", gap_append_then_flip)
+    monkeypatch.setattr(bucketing, "write_meta_row", gap_append_then_flip)
     with pytest.raises(RuntimeError, match="COMMITTED"):
         rebucket_minhash_store(spark, "mh_gap", 8)
-    monkeypatch.setattr(ds, "write_meta_row", real_write_meta_row)
+    monkeypatch.setattr(bucketing, "write_meta_row", real_write_meta_row)
 
     assert state["fired"]
     # the cutover COMMITTED: live at gen 1 / 8 buckets; old gen kept

@@ -215,7 +215,7 @@ def test_stream_ingest_across_rebucket_generations(spark, corpus, tmp_path):
     the NEW generation from the meta pointer and append at the new
     bucket count — the store stays consistent and answers exactly."""
     from polars_text_spark.operators.dedup_store import (
-        _phys,
+        MINHASH_STORE,
         rebucket_minhash_store,
     )
     from polars_text_spark.sources.bucketing import store_generation
@@ -236,13 +236,14 @@ def test_stream_ingest_across_rebucket_generations(spark, corpus, tmp_path):
     # post-cutover triggers must land in the NEW generation's tables
     _drain(spark, src2, str(tmp_path / "gck2"), "mh_genstream")
     assert store_generation(spark, "mh_genstream") == 1
-    n = spark.table(_phys(spark, "mh_genstream", "shingles")).count()
+    store = MINHASH_STORE.open(spark, "mh_genstream")
+    n = spark.table(store.table("shingles")).count()
     assert n == corpus.count()
     # and the physical tables carry the post-rebucket bucket count
     info = {
         r["col_name"]: r["data_type"]
         for r in spark.sql(
-            f"DESCRIBE EXTENDED {_phys(spark, 'mh_genstream', 'bands')}"
+            f"DESCRIBE EXTENDED {store.table('bands')}"
         ).collect()
     }
     assert int(info["Num Buckets"]) == 8
