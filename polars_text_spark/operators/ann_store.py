@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polars_text_spark.operators.similarity import (
+    _slim_pairs,
     dot,
     rank_topk,
     sha_band_keys,
@@ -117,11 +118,12 @@ def band_stats_from_ann_store(
     """Bucket-cardinality audit of the standing ANN band table — the
     vector twin of :func:`polars_text_spark.operators.dedup_store.
     band_stats_from_store`. Under-provisioned ``(num_planes, bands)``
-    on a grown corpus is exactly the degenerate candidate-fan-out
-    regime the re-rank router guards (``rerank="auto"``, SCALING.md
-    round-13): run this after appends; when ``max_bucket_size``
-    approaches corpus/2^bits-per-band the store wants a rebuild at
-    wider planes, and until then queries want ``rerank="arrow"``.
+    on a grown corpus is the degenerate candidate-fan-out regime
+    (SCALING.md round-13): run this after appends; when
+    ``max_bucket_size`` approaches corpus/2^bits-per-band the store
+    wants a rebuild at wider planes. The store paths have no
+    ``rerank`` switch (see :func:`topk_from_store`), so the rebuild is
+    the fix, not a re-rank route.
     One groupBy on the band table's own key (no Exchange on the store
     side), tombstones respected. ANN bands carry no signature-group
     column, so the cross-signature telemetry columns are null — the
@@ -225,6 +227,43 @@ def append_ann_shard(
     _append_rows(store, shard, id_col, vec_col)
 
 
+def _store_topk_tail(
+    cands: DataFrame,
+    neighbors: DataFrame,
+    qunit: DataFrame,
+    *,
+    k: int,
+    exclude_self: bool,
+) -> DataFrame:
+    """The slim-stream tail of both store top-k paths. ``cands`` is the
+    ``(query_id, neighbor_id)`` band-collision stream, hash-partitioned
+    on ``neighbor_id``: no vector payload rides the candidate
+    exchanges, and the dedup (:func:`~polars_text_spark.operators.
+    similarity._slim_pairs`) keys on a superset of that partitioning,
+    so dedup and the re-rank join against the id-bucketed unit vectors
+    ``neighbors(id, u)`` share ONE exchange. The query vectors
+    ``qunit(query_id, __qvec)`` re-attach after the dedup; a query id
+    given twice would multiply its pairs there, so the scored
+    ``(query_id, neighbor_id, cosine)`` rows are deduped again — on
+    the same partitioning, no exchange added, no vector in the
+    aggregate."""
+    pairs = _slim_pairs(cands, exclude_self=exclude_self)
+    unit = neighbors.select(
+        F.col("id").alias("neighbor_id"), F.col("u").alias("__vvec")
+    )
+    scored = (
+        pairs.join(unit, "neighbor_id")
+        .join(qunit, "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
+        )
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    return rank_topk(scored, k)
+
+
 def topk_against_shard(
     spark: SparkSession,
     name: str,
@@ -266,36 +305,16 @@ def topk_against_shard(
     shard_bands = banded.select(
         F.col("id").alias("neighbor_id"), "band_key"
     )
-    # Slim candidate stream + neighbor-keyed dedup (round 17) — same
-    # restructure as topk_from_store: no vector payload rides the
-    # candidate exchanges, the dedup keying doubles as the re-rank
-    # join keying, and the query vectors re-attach after the dedup
-    # (this also deletes the former upfront banded-x-unit join that
-    # carried __qvec into the candidate generation).
     cands = (
         store_bands.join(q_bands, "band_key")
         .unionByName(q_bands.join(F.broadcast(shard_bands), "band_key"))
         .select("query_id", "neighbor_id")
         .repartition(F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
     )
-    if exclude_self:
-        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    neighbors = (
-        store.read("vectors")
-        .unionByName(unit)
-        .select(F.col("id").alias("neighbor_id"), F.col("u").alias("__vvec"))
+    neighbors = store.read("vectors").unionByName(unit)
+    return _store_topk_tail(
+        cands, neighbors, qunit, k=k, exclude_self=exclude_self
     )
-    scored = (
-        cands.join(neighbors, "neighbor_id")
-        .join(qunit, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
-        )
-    )
-    return rank_topk(scored, k)
 
 
 def topk_from_store(
@@ -358,35 +377,11 @@ def topk_from_store(
     store_bands = store.read("bands").select(
         F.col("id").alias("neighbor_id"), "band_key"
     )
-    # Candidate dedup folded into the re-rank keying (round 17,
-    # VERDICT r16 #6 + guide §2.3/§2.4): the candidate stream carries
-    # ONLY (query_id, neighbor_id) — the query vector no longer rides
-    # every band collision through the dedup exchange — and the dedup
-    # is hash-partitioned on neighbor_id (a subset of the dedup keys,
-    # so the clustering requirement still holds) at the store's bucket
-    # count, which is exactly the re-rank join's requirement: dedup
-    # and re-rank share ONE exchange instead of exchanging on
-    # (query_id, neighbor_id) and re-exchanging on neighbor_id. The
-    # query vectors re-attach AFTER the dedup via the (small by
-    # contract) query-side join.
     cands = (
         store_bands.join(q_bands, "band_key")
         .select("query_id", "neighbor_id")
         .repartition(m["buckets"], F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
     )
-    if exclude_self:
-        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    unit = store.read("vectors").select(
-        F.col("id").alias("neighbor_id"), F.col("u").alias("__vvec")
+    return _store_topk_tail(
+        cands, store.read("vectors"), qunit, k=k, exclude_self=exclude_self
     )
-    scored = (
-        cands.join(unit, "neighbor_id")
-        .join(qunit, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
-        )
-    )
-    return rank_topk(scored, k)

@@ -1901,32 +1901,35 @@ def embedding_dup_pairs(
     bands: int = 4,
     seed: int = 42,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs via LSH bucket candidates."""
-    from polars_text_spark.operators.similarity import (
-        dot,
-        lsh_band_keys,
-        with_l2_normalized,
-    )
+    """Embedding-cosine near-dup pairs via LSH bucket candidates:
+    ``(id_a, id_b, cosine)`` with ``id_a < id_b`` and ``cosine >=
+    threshold``, null vectors dropped. The banded self-join runs
+    through the shared top-k candidate core, so the pair dedup moves
+    ``(id, id, cosine)`` rows, never the vectors."""
+    from polars_text_spark.operators.similarity import _keyed_topk, lsh_band_keys
 
-    keys = lsh_band_keys(
-        F.col(vec_col), dim=dim, num_planes=num_planes, bands=bands, seed=seed
+    keys = lambda c: lsh_band_keys(  # noqa: E731
+        c, dim=dim, num_planes=num_planes, bands=bands, seed=seed
     )
-    banded = with_l2_normalized(
-        vectors.select(F.col(id_col).alias("id"), vec_col), vec_col, "vec"
+    pairs = _keyed_topk(
+        vectors,
+        vectors,
+        key="band_key",
+        v_keys=keys,
+        q_keys=keys,
+        multi_key=True,
+        k=None,
+        id_col=id_col,
+        vec_col=vec_col,
+        exclude_self=False,
+    )
+    return pairs.filter(
+        (F.col("query_id") < F.col("neighbor_id"))
+        & (F.col("cosine") >= threshold)
     ).select(
-        "id",
-        "vec",
-        F.explode(keys).alias("band_key"),
-    )
-    left = banded.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), "band_key")
-    right = banded.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), "band_key")
-    return (
-        left.join(right, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cosine", dot(F.col("vec_a"), F.col("vec_b")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+        F.col("query_id").alias("id_a"),
+        F.col("neighbor_id").alias("id_b"),
+        "cosine",
     )
 
 

@@ -811,7 +811,11 @@ def _train_vectors(
         return np.empty((0, 0), dtype=np.float32)
     frac = min(1.0, (1.5 * train_sample) / n_total)
     rows = vectors.select(vec_col).sample(fraction=frac, seed=seed).collect()
-    mat = np.array([np.asarray(r[0], dtype=np.float32) for r in rows])
+    # null vectors have no place in the codebook (np.array of a null
+    # among vectors is ragged); the top-k core drops them on both sides
+    mat = np.array(
+        [np.asarray(r[0], dtype=np.float32) for r in rows if r[0] is not None]
+    )
     if len(mat) > train_sample:
         # a limit() here would re-bias toward early partitions; trim
         # with a seeded driver-side draw instead
@@ -854,13 +858,9 @@ def cosine_topk_ivf(
     ``n_lists`` regime a grown corpus hits by accident routes to
     arrow automatically; two extra count jobs, nothing else.
     """
-    if rerank not in ("expr", "arrow", "auto"):
-        raise ValueError(
-            f"rerank must be 'expr', 'arrow' or 'auto', got {rerank!r}"
-        )
     sample = _train_vectors(vectors, vec_col, train_sample, seed)
     if len(sample) == 0:
-        # Empty vectors table: degenerate to an empty result with the
+        # No non-null vector: degenerate to an empty result with the
         # correct schema directly — no codebook to train, and no
         # detour through cosine_topk, whose bounded query-side collect
         # would raise on a large query frame that this path never
@@ -886,72 +886,23 @@ def cosine_topk_ivf(
         n_lists = max(1, int(np.sqrt(len(sample))))
     n_lists = min(n_lists, len(sample))
     nprobe = min(nprobe, n_lists)
-    if rerank == "auto":
-        n_v = vectors.where(F.col(vec_col).isNotNull()).count()
-        n_q = queries.where(F.col(vec_col).isNotNull()).count()
-        rerank = _auto_rerank(
-            n_v * n_q * nprobe / n_lists, n_q, 65536
-        )
     centroids = _kmeans_fit(sample, n_lists, seed)
-
-    assign_one = _nearest_centroids_udf(centroids, 1)
-    probe_many = _nearest_centroids_udf(centroids, nprobe)
-
-    if rerank == "arrow":
-        vnn = vectors.where(F.col(vec_col).isNotNull())
-        qnn = queries.where(F.col(vec_col).isNotNull())
-        v_keys = vnn.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.explode(assign_one(F.col(vec_col))).alias("list_id"),
-        )
-        q_keys = qnn.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_many(F.col(vec_col))).alias("list_id"),
-        )
-        # each vector lives in exactly ONE list and a query's probed
-        # lists are distinct, so (query_id, neighbor_id) is already
-        # unique — no dedup exchange
-        cands = v_keys.join(q_keys, "list_id").select(
-            "query_id", "neighbor_id"
-        )
-        if exclude_self:
-            cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-        scored = _arrow_candidate_scores(
-            vnn, qnn, cands, id_col=id_col, vec_col=vec_col
-        )
-        return rank_topk(scored, k)
-
-    v = with_l2_normalized(
-        vectors.select(F.col(id_col).alias("neighbor_id"), vec_col), vec_col, "__vvec"
-    ).select(
-        "neighbor_id",
-        "__vvec",
-        F.explode(assign_one(F.col(vec_col))).alias("list_id"),
-    )
-    q = with_l2_normalized(
-        queries.select(F.col(id_col).alias("query_id"), vec_col), vec_col, "__qvec"
-    ).select(
-        "query_id",
-        "__qvec",
-        F.explode(probe_many(F.col(vec_col))).alias("list_id"),
-    )
     # each vector lives in exactly ONE list (assign_one) and a query's
     # probed lists are distinct, so (query_id, neighbor_id) is already
-    # unique — the dedup this used to do was a pure Exchange of
-    # vector-carrying rows (2 x dim doubles per candidate) for nothing
-    cands = v.join(q, "list_id")
-    if exclude_self:
-        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    # unique — single-key candidates, no dedup exchange
+    return _keyed_topk(
+        vectors,
+        queries,
+        key="list_id",
+        v_keys=_nearest_centroids_udf(centroids, 1),
+        q_keys=_nearest_centroids_udf(centroids, nprobe),
+        multi_key=False,
+        k=k,
+        id_col=id_col,
+        vec_col=vec_col,
+        exclude_self=exclude_self,
+        rerank=rerank,
+        pair_rate=nprobe / n_lists,
     )
 
 
@@ -992,59 +943,41 @@ def cosine_topk_ivf_kmeans(
     )
     nprobe = min(nprobe, len(centroids))
 
-    v = (
-        with_l2_normalized(
-            vectors.select(F.col(id_col).alias("neighbor_id"), vec_col),
-            vec_col,
-            "__vvec",
+    assign = assign.select(
+        F.col(id_col).alias("neighbor_id"), F.col("cluster").alias("list_id")
+    )
+
+    def probes(vec):
+        # nprobe nearest lists per query: sort (dist, cid) structs —
+        # array sort is lexicographic, so ties resolve to the smaller
+        # list id, matching the oracle's ORDER BY d, cid
+        vcast = F.transform(vec, lambda x: x.cast("double"))
+        dc = F.array(
+            *[
+                F.struct(
+                    _sq_dist(vcast, c).alias("d"),
+                    F.lit(i).cast("int").alias("cid"),
+                )
+                for i, c in enumerate(centroids)
+            ]
         )
-        .select("neighbor_id", "__vvec")
-        .join(
-            assign.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col("cluster").alias("list_id"),
-            ),
-            "neighbor_id",
+        return F.transform(
+            F.slice(F.array_sort(dc), 1, nprobe), lambda s: s.getField("cid")
         )
-    )
-    # nprobe nearest lists per query: sort (dist, cid) structs — array
-    # sort is lexicographic, so ties resolve to the smaller list id,
-    # matching the oracle's ORDER BY d, cid
-    vcast = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    dc = F.array(
-        *[
-            F.struct(
-                _sq_dist(vcast, c).alias("d"),
-                F.lit(i).cast("int").alias("cid"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    probes = F.transform(
-        F.slice(F.array_sort(dc), 1, nprobe), lambda s: s.getField("cid")
-    )
-    q = with_l2_normalized(
-        queries.select(F.col(id_col).alias("query_id"), vec_col),
-        vec_col,
-        "__qvec",
-    ).select(
-        "query_id", "__qvec", F.explode(probes).alias("list_id")
-    )
+
     # each vector lives in exactly ONE list and probes are distinct,
     # so (query_id, neighbor_id) is already unique — no dedup needed
-    cands = v.join(q, "list_id")
-    if exclude_self:
-        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _keyed_topk(
+        vectors,
+        queries,
+        key="list_id",
+        v_keys=assign,
+        q_keys=probes,
+        multi_key=False,
+        k=k,
+        id_col=id_col,
+        vec_col=vec_col,
+        exclude_self=exclude_self,
     )
 
 
@@ -1120,7 +1053,7 @@ def _hyperplanes(dim: int, num_planes: int, seed: int) -> np.ndarray:
     return rng.standard_normal((num_planes, dim))
 
 
-def _signature_bits(vec_col, planes: np.ndarray):
+def _signature_bits(vec_col, planes):
     """One sign bit per hyperplane, as built-in expressions."""
     v = vec_col.cast("array<double>")
     bits = []
@@ -1133,6 +1066,25 @@ def _signature_bits(vec_col, planes: np.ndarray):
         )
         bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)))
     return bits
+
+
+def _band_keys(bits, bands: int):
+    """``array<string>`` of band keys from per-plane sign bits: band
+    ``b`` is ``"b:"`` followed by its ``len(bits) // bands`` bits —
+    the one band-key assembly of :func:`lsh_band_keys` and
+    :func:`sha_band_keys`."""
+    r = len(bits) // bands
+    return F.array(
+        *[
+            F.concat_ws(
+                "",
+                F.lit(str(b)),
+                F.lit(":"),
+                *[c.cast("string") for c in bits[b * r : (b + 1) * r]],
+            )
+            for b in range(bands)
+        ]
+    )
 
 
 def lsh_band_keys(
@@ -1151,20 +1103,14 @@ def lsh_band_keys(
     and the candidate join degrades toward brute force as n grows.
     ``num_planes`` must grow with ``log2(n)`` (e.g. 64 planes / 8
     bands -> 8-bit bands for 10^8 vectors) to keep per-bucket
-    candidates bounded; the re-rank A/B in SCALING.md round-12
-    measures what under-provisioned bands cost and `rerank="arrow"`
-    is the mitigation when re-provisioning isn't possible."""
-    planes = _hyperplanes(dim, num_planes, seed)
-    bits = _signature_bits(vec_col, planes)
-    rows_per_band = num_planes // bands
-    keys = []
-    for b in range(bands):
-        chunk = bits[b * rows_per_band : (b + 1) * rows_per_band]
-        key = F.concat_ws(
-            "", F.lit(str(b)), F.lit(":"), *[c.cast("string") for c in chunk]
-        )
-        keys.append(key)
-    return F.array(*keys)
+    candidates bounded. SCALING.md round-12/13 measures what
+    under-provisioned bands cost; on the top-k operators
+    ``rerank="auto"`` routes such a fan-out to the Arrow scorer, and
+    :func:`polars_text_spark.operators.dedup.lsh_band_stats` audits
+    bucket sizes when re-provisioning is the real fix."""
+    return _band_keys(
+        _signature_bits(vec_col, _hyperplanes(dim, num_planes, seed)), bands
+    )
 
 
 # Measured crossover for the re-rank route (scripts/scale_probe_rerank
@@ -1181,60 +1127,19 @@ def lsh_band_keys(
 ARROW_RERANK_MIN_EST_PAIRS = 4_000_000
 
 
-def _auto_rerank(
-    est_pairs: float, n_queries: int, max_query_rows: int
-) -> str:
-    """Resolve ``rerank="auto"``: the Arrow route when the estimated
-    candidate fan-out crosses :data:`ARROW_RERANK_MIN_EST_PAIRS` and
-    the query side is collectable, else the expression route. When the
-    estimate says arrow but the query side is NOT collectable, warn
-    loudly instead of silently eating the interpreted-dot cost — the
-    caller can split the query batch."""
-    if est_pairs < ARROW_RERANK_MIN_EST_PAIRS:
-        return "expr"
-    if n_queries > max_query_rows:
-        import warnings
-
-        warnings.warn(
-            f"rerank='auto': estimated candidate fan-out "
-            f"({est_pairs:.2g} pairs) is past the Arrow crossover "
-            f"({ARROW_RERANK_MIN_EST_PAIRS}), but the query side "
-            f"({n_queries} rows) exceeds max_query_rows "
-            f"({max_query_rows}); falling back to the expression "
-            "re-rank — split the query batch (or raise the budget) to "
-            "take the measured 2-8x Arrow win (SCALING.md round-12)",
-            stacklevel=3,
-        )
-        return "expr"
-    return "arrow"
-
-
-def _auto_banded_rerank(
-    vectors: DataFrame,
-    queries: DataFrame,
-    vec_col: str,
-    *,
-    num_planes: int,
-    bands: int,
-    max_query_rows: int = 65536,
-) -> str:
-    """Counts-only route estimate for the banded (LSH) paths:
-    ``est = n_v * n_q * (1 - (1 - 2^-r)^bands)`` with ``r`` bits per
-    band — per-pair collision probability under UNIFORM bucket
-    occupancy, which is a LOWER bound (clustering only concentrates
-    buckets and raises collisions), so auto errs toward the
-    expression route. The structural degenerate regime — bands too
-    narrow for the corpus (the accident a grown corpus hits, see
-    :func:`lsh_band_keys` sizing note) — is captured by the
-    parameters alone; DATA-driven skew on top of adequate bands is
-    not, which is what :func:`lsh_band_stats` audits (pass
-    ``rerank="arrow"`` explicitly when it reports hot buckets). Two
-    count jobs, nothing else touches the corpus."""
+def _band_pair_rate(num_planes: int, bands: int) -> float:
+    """Expected candidate fraction of all vector x query pairs on the
+    banded paths: ``1 - (1 - 2^-r)^bands`` with ``r`` bits per band —
+    the per-pair collision probability under UNIFORM bucket occupancy,
+    a LOWER bound (clustering only concentrates buckets and raises
+    collisions), so ``rerank="auto"`` errs toward the expression
+    route. The structural degenerate regime — bands too narrow for the
+    corpus (see the :func:`lsh_band_keys` sizing note) — is captured
+    by the parameters alone; DATA-driven skew on top of adequate bands
+    is not, which is what ``lsh_band_stats`` audits (pass
+    ``rerank="arrow"`` explicitly when it reports hot buckets)."""
     r = num_planes // bands
-    n_v = vectors.where(F.col(vec_col).isNotNull()).count()
-    n_q = queries.where(F.col(vec_col).isNotNull()).count()
-    collide = 1.0 - (1.0 - 2.0 ** -r) ** bands
-    return _auto_rerank(n_v * n_q * collide, n_q, max_query_rows)
+    return 1.0 - (1.0 - 2.0 ** -r) ** bands
 
 
 def rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -1248,6 +1153,22 @@ def rank_topk(scored: DataFrame, k: int) -> DataFrame:
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
+
+
+def _slim_pairs(
+    joined: DataFrame, *, exclude_self: bool, multi_key: bool = True
+) -> DataFrame:
+    """The slim-pair step: the ``(query_id, neighbor_id)`` stream of a
+    key join, deduplicated when a pair can collide on more than one
+    key (``multi_key``), self-pairs dropped on request. No vector
+    payload rides it — shared by the Arrow route of
+    :func:`_keyed_topk` and the ANN store's top-k tail."""
+    pairs = joined.select("query_id", "neighbor_id")
+    if multi_key:
+        pairs = pairs.dropDuplicates(["query_id", "neighbor_id"])
+    if exclude_self:
+        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    return pairs
 
 
 def _arrow_candidate_scores(
@@ -1331,6 +1252,132 @@ def _arrow_candidate_scores(
     return scored.join(cands, ["query_id", "neighbor_id"])
 
 
+def _keyed_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    *,
+    key: str,
+    v_keys,
+    q_keys,
+    multi_key: bool,
+    k: int | None,
+    id_col: str,
+    vec_col: str,
+    exclude_self: bool,
+    rerank: str = "expr",
+    pair_rate: float | None = None,
+    max_query_rows: int = 65536,
+) -> DataFrame:
+    """The one candidate -> dedup -> score -> rank pipeline behind
+    every in-flight ANN top-k route (LSH, sha-LSH, IVF, k-means IVF,
+    the contrastive/bitext miners, embedding near-dup pairs).
+
+    Candidates are key collisions: each side's ``(id, vector)`` rows
+    carry an array of keys — ``q_keys``/``v_keys`` map the raw vector
+    column to it (band keys, IVF probe lists), exploded into column
+    ``key`` and equi-joined; ``v_keys`` may instead be a precomputed
+    ``(neighbor_id, key)`` assignment frame (the k-means lists), joined
+    on ``neighbor_id``. Only this function drops null vectors (both
+    sides: no signature, null cosine), applies ``exclude_self``,
+    deduplicates pairs — only when ``multi_key`` says a pair can
+    collide on more than one key (band keys; an IVF vector lives in
+    ONE list and a query's probes are distinct, so its pairs are
+    already unique) — and validates and resolves ``rerank``. Returns
+    ``rank_topk(scored, k)``, or with ``k=None`` the scored candidate
+    stream ``(query_id, neighbor_id, cosine)``.
+
+    The two scorers, bit-identical in output:
+
+    - ``"expr"`` scores in the JOIN PROJECTION and dedups the slim
+      frame after: a pair colliding in several bands recomputes its
+      (cheap) dot per collision, but the dedup exchange then moves 3
+      scalars per row instead of two dim-sized vectors (the
+      vector-carrying dedup was the OOM of the sf0.1 full-corpus
+      self-joins). Duplicate rows agree exactly — the dot is a
+      deterministic expression of the pair — so keeping any is sound.
+    - ``"arrow"`` joins slim ``(id, key)`` rows and scores the
+      deduplicated ``(query_id, neighbor_id)`` stream
+      (:func:`_slim_pairs`) in the Arrow fold scorer
+      (:func:`_arrow_candidate_scores`): each candidate vector scores
+      once, vectorized — the high-fan-out shape (collapsed bands,
+      under-provisioned lists; SCALING.md round-12 A/B). It needs a
+      collectable query side (``max_query_rows`` + the byte budget).
+    - ``"auto"`` exists only when the caller passes ``pair_rate``, the
+      expected candidate fraction of all vector x query pairs; it
+      routes to arrow when ``n_v * n_q * pair_rate`` reaches
+      :data:`ARROW_RERANK_MIN_EST_PAIRS` and the query side is
+      collectable — else expr, warning when the estimate said arrow.
+      Two count jobs, nothing else touches the corpus."""
+    routes = ("expr", "arrow") if pair_rate is None else ("expr", "arrow", "auto")
+    if rerank not in routes:
+        raise ValueError(f"rerank must be one of {routes}, got {rerank!r}")
+    vectors = vectors.where(F.col(vec_col).isNotNull())
+    queries = queries.where(F.col(vec_col).isNotNull())
+    if rerank == "auto":
+        n_q = queries.count()
+        est_pairs = vectors.count() * n_q * pair_rate
+        rerank = "arrow"
+        if est_pairs < ARROW_RERANK_MIN_EST_PAIRS:
+            rerank = "expr"
+        elif n_q > max_query_rows:
+            import warnings
+
+            warnings.warn(
+                f"rerank='auto': estimated candidate fan-out "
+                f"({est_pairs:.2g} pairs) is past the Arrow crossover "
+                f"({ARROW_RERANK_MIN_EST_PAIRS}), but the query side "
+                f"({n_q} rows) exceeds max_query_rows "
+                f"({max_query_rows}); falling back to the expression "
+                "re-rank — split the query batch (or raise the budget) "
+                "to take the measured 2-8x Arrow win (SCALING.md "
+                "round-12)",
+                stacklevel=3,
+            )
+            rerank = "expr"
+
+    def keyed(df, cols, keys):
+        if isinstance(keys, DataFrame):
+            return df.select(*cols).join(keys, "neighbor_id")
+        return df.select(*cols, F.explode(keys(F.col(vec_col))).alias(key))
+
+    if rerank == "arrow":
+        pairs = _slim_pairs(
+            keyed(vectors, [F.col(id_col).alias("neighbor_id")], v_keys).join(
+                keyed(queries, [F.col(id_col).alias("query_id")], q_keys), key
+            ),
+            exclude_self=exclude_self,
+            multi_key=multi_key,
+        )
+        scored = _arrow_candidate_scores(
+            vectors, queries, pairs,
+            id_col=id_col, vec_col=vec_col, max_query_rows=max_query_rows,
+        )
+    else:
+        v = with_l2_normalized(
+            vectors.select(F.col(id_col).alias("neighbor_id"), vec_col),
+            vec_col,
+            "__vvec",
+        )
+        q = with_l2_normalized(
+            queries.select(F.col(id_col).alias("query_id"), vec_col),
+            vec_col,
+            "__qvec",
+        )
+        cands = keyed(v, ["neighbor_id", "__vvec"], v_keys).join(
+            keyed(q, ["query_id", "__qvec"], q_keys), key
+        )
+        if exclude_self:
+            cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
+        scored = cands.select(
+            "query_id",
+            "neighbor_id",
+            dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
+        )
+        if multi_key:
+            scored = scored.dropDuplicates(["query_id", "neighbor_id"])
+    return scored if k is None else rank_topk(scored, k)
+
+
 def banded_scored_candidates(
     vectors: DataFrame,
     queries: DataFrame,
@@ -1342,103 +1389,28 @@ def banded_scored_candidates(
     rerank: str = "expr",
     max_query_rows: int = 65536,
 ) -> DataFrame:
-    """Shared banding-OR-construction candidate stage: explode band
-    keys on both sides (``keys_fn(vec Column) -> array<string>``),
-    equi-join on the key, dedup, exact cosine per surviving pair —
-    ``(query_id, neighbor_id, cosine)``. Null vectors are dropped on
-    BOTH sides (a null vector has no meaningful signature and its
-    cosine is null). Consumed by the ANN top-k tail
-    (:func:`rank_topk`) and by the contrastive-triplet miner, which
-    derives positives AND hard negatives from ONE candidate shuffle.
-
-    ``rerank="arrow"`` routes the per-candidate scoring through the
-    Arrow fold scorer (:func:`_arrow_candidate_scores`): the band join
-    then carries NO vector payload and each candidate vector scores
-    once, vectorized — the high-fan-out shape (collapsed bands, large
-    query sets; A/B in SCALING.md round-12). It requires a
-    collectable query side (``max_query_rows`` + the byte budget);
-    outputs are bit-identical to the default expression path."""
-    if rerank not in ("expr", "arrow"):
-        raise ValueError(f"rerank must be 'expr' or 'arrow', got {rerank!r}")
-    if rerank == "arrow":
-        vnn = vectors.where(F.col(vec_col).isNotNull())
-        qnn = queries.where(F.col(vec_col).isNotNull())
-        v_keys = vnn.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.explode(keys_fn(F.col(vec_col))).alias("band_key"),
-        )
-        q_keys = qnn.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(keys_fn(F.col(vec_col))).alias("band_key"),
-        )
-        cands = (
-            v_keys.join(q_keys, "band_key")
-            .select("query_id", "neighbor_id")
-            .dropDuplicates(["query_id", "neighbor_id"])
-        )
-        if exclude_self:
-            cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-        return _arrow_candidate_scores(
-            vnn, qnn, cands,
-            id_col=id_col, vec_col=vec_col, max_query_rows=max_query_rows,
-        )
-    v = with_l2_normalized(
-        vectors.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("neighbor_id"), vec_col
-        ),
-        vec_col,
-        "__vvec",
-    ).select("neighbor_id", "__vvec", F.explode(keys_fn(F.col(vec_col))).alias("band_key"))
-    q = with_l2_normalized(
-        queries.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("query_id"), vec_col
-        ),
-        vec_col,
-        "__qvec",
-    ).select("query_id", "__qvec", F.explode(keys_fn(F.col(vec_col))).alias("band_key"))
-    # Score in the JOIN PROJECTION, dedup the slim frame after: a pair
-    # colliding in several bands recomputes its (cheap, codegen'd) dot
-    # per collision, but the dropDuplicates exchange then moves 3
-    # scalars per row instead of two dim-sized vectors — at corpus
-    # scale the vector-carrying dedup shuffle is ~dim*16/24 x heavier
-    # and was the OOM in the sf0.1 full-corpus self-joins (contrastive
-    # / bitext). Duplicate rows agree exactly (the dot is a
-    # deterministic expression of the pair), so keeping any one is
-    # sound.
-    cands = v.join(q, "band_key")
-    if exclude_self:
-        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
-    )
-    return scored.dropDuplicates(["query_id", "neighbor_id"])
-
-
-def _banded_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    keys_fn,
-    *,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    exclude_self: bool,
-    rerank: str = "expr",
-) -> DataFrame:
-    """Banding-OR-construction ANN: the shared candidate stage plus
-    the exact-cosine re-rank tail."""
-    scored = banded_scored_candidates(
+    """Shared banding-OR-construction candidate stage: band keys on
+    both sides (``keys_fn(vec Column) -> array<string>``), key
+    equi-join, dedup, exact cosine per surviving pair —
+    ``(query_id, neighbor_id, cosine)``, null vectors dropped on both
+    sides. Consumed by the contrastive-triplet miner, which derives
+    positives AND hard negatives from ONE candidate shuffle, and by
+    bitext mining. ``rerank`` is ``"expr"`` or ``"arrow"`` (see
+    :func:`_keyed_topk`); outputs are bit-identical."""
+    return _keyed_topk(
         vectors,
         queries,
-        keys_fn,
+        key="band_key",
+        v_keys=keys_fn,
+        q_keys=keys_fn,
+        multi_key=True,
+        k=None,
         id_col=id_col,
         vec_col=vec_col,
         exclude_self=exclude_self,
         rerank=rerank,
+        max_query_rows=max_query_rows,
     )
-    return rank_topk(scored, k)
 
 
 def cosine_topk_lsh(
@@ -1459,25 +1431,25 @@ def cosine_topk_lsh(
     exact cosine re-rank. A vector colliding with a query in ANY band
     is a candidate (standard banding OR-construction).
     ``rerank="arrow"`` scores candidates in the Arrow fold scorer —
-    bit-identical output, the high-fan-out shape (see
-    :func:`banded_scored_candidates`); ``"auto"`` resolves the route
-    from the counts-only fan-out estimate
-    (:func:`_auto_banded_rerank`)."""
-    if rerank == "auto":
-        rerank = _auto_banded_rerank(
-            vectors, queries, vec_col, num_planes=num_planes, bands=bands
-        )
-    return _banded_topk(
+    bit-identical output, the high-fan-out shape; ``"auto"`` resolves
+    the route from the counts-only fan-out estimate
+    (:func:`_band_pair_rate`, routing in :func:`_keyed_topk`)."""
+    keys = lambda c: lsh_band_keys(  # noqa: E731
+        c, dim=dim, num_planes=num_planes, bands=bands, seed=seed
+    )
+    return _keyed_topk(
         vectors,
         queries,
-        lambda c: lsh_band_keys(
-            c, dim=dim, num_planes=num_planes, bands=bands, seed=seed
-        ),
+        key="band_key",
+        v_keys=keys,
+        q_keys=keys,
+        multi_key=True,
         k=k,
         id_col=id_col,
         vec_col=vec_col,
         exclude_self=exclude_self,
         rerank=rerank,
+        pair_rate=_band_pair_rate(num_planes, bands),
     )
 
 
@@ -1521,27 +1493,9 @@ def sha_band_keys(vec_col, *, dim: int, num_planes: int = 16, bands: int = 4):
             ),
         )
     )
-    bits = []
-    for j in range(num_planes):
-        signs = F.array(*[F.lit(_sha_sign(j, p)) for p in range(dim)])
-        dotv = F.aggregate(
-            F.zip_with(v, signs, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dotv >= 0, F.lit(1)).otherwise(F.lit(0)))
-    rows_per_band = num_planes // bands
-    keys = []
-    for b in range(bands):
-        chunk = bits[b * rows_per_band : (b + 1) * rows_per_band]
-        keys.append(
-            F.concat_ws(
-                "", F.lit(str(b)), F.lit(":"), *[c.cast("string") for c in chunk]
-            )
-        )
-    return F.when(dim_ok, F.array(*keys)).otherwise(
-        dim_err.cast("array<string>")
-    )
+    planes = [[_sha_sign(j, p) for p in range(dim)] for j in range(num_planes)]
+    keys = _band_keys(_signature_bits(vec_col, planes), bands)
+    return F.when(dim_ok, keys).otherwise(dim_err.cast("array<string>"))
 
 
 def cosine_topk_lsh_sha(
@@ -1567,18 +1521,21 @@ def cosine_topk_lsh_sha(
     both sides (matching :func:`polars_text_spark.operators.ann_store.
     topk_from_store`, which is value-identical over the same corpus).
     ``rerank="auto"`` resolves the route from the counts-only fan-out
-    estimate (:func:`_auto_banded_rerank`)."""
-    if rerank == "auto":
-        rerank = _auto_banded_rerank(
-            vectors, queries, vec_col, num_planes=num_planes, bands=bands
-        )
-    return _banded_topk(
+    estimate (:func:`_band_pair_rate`)."""
+    keys = lambda c: sha_band_keys(  # noqa: E731
+        c, dim=dim, num_planes=num_planes, bands=bands
+    )
+    return _keyed_topk(
         vectors,
         queries,
-        lambda c: sha_band_keys(c, dim=dim, num_planes=num_planes, bands=bands),
+        key="band_key",
+        v_keys=keys,
+        q_keys=keys,
+        multi_key=True,
         k=k,
         id_col=id_col,
         vec_col=vec_col,
         exclude_self=exclude_self,
         rerank=rerank,
+        pair_rate=_band_pair_rate(num_planes, bands),
     )

@@ -8,10 +8,14 @@ n_lists), on a corpus big enough for the re-rank to matter.
 
 Corpus: sf0.1 embeddings (2,000 x dim 64) replicated REPLICAS x with a
 deterministic per-replica direction perturbation -> 100k vectors;
-query side 64 vectors. Outputs are bit-identical between variants
-(pinned by tests/test_arrow_rerank.py); this probe measures only time.
-Consumption is sum(cosine)+count so the dots cannot be pruned (the
-Catalyst A/B trap in SCALING.md).
+query side 64 vectors. Consumption is sum(cosine)+count so the dots
+cannot be pruned (the Catalyst A/B trap in SCALING.md). The three
+arms of a config are bit-identical by contract (pinned by
+tests/test_arrow_rerank.py): the probe checks it too and exits 1 when
+their row counts or row digests disagree. The digest is the integer
+sum of a hash of each (query_id, neighbor_id, cosine, rank) row —
+exact and order-free, where a double sum(cosine) may move in its last
+bits with the summation order.
 
 Usage: python scripts/scale_probe_rerank.py [sf_dir] [replicas]
 Writes one JSON line; paste into SCALING.md.
@@ -65,12 +69,19 @@ def main() -> int:
     queries = base.limit(64).localCheckpoint(eager=True)
     n = corpus.count()
 
-    def timed(df) -> tuple[float, int, float]:
+    def timed(df) -> tuple[float, int, float, int]:
         t0 = time.time()
         row = df.agg(
-            F.sum("cosine").alias("s"), F.count(F.lit(1)).alias("n")
+            F.sum("cosine").alias("s"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.hash("query_id", "neighbor_id", "cosine", "rank").cast("long")
+            ).alias("h"),
         ).collect()[0]
-        return round(time.time() - t0, 2), int(row["n"]), float(row["s"])
+        return (
+            round(time.time() - t0, 2), int(row["n"]), float(row["s"]),
+            int(row["h"]),
+        )
 
     configs = [
         ("lsh_realistic", lambda rr: cosine_topk_lsh_sha(
@@ -88,16 +99,21 @@ def main() -> int:
            "queries": 64, "dim": 64, "runs": {}}
     from polars_text_spark.plans import explain_str
 
+    mismatched = []
     for name, mk in configs:
         entry = {}
+        results = set()
         for rr in ("expr", "arrow", "auto"):
             best = None
             for _ in range(2):
-                sec, rows, s = timed(mk(rr))
+                sec, rows, s, digest = timed(mk(rr))
                 best = sec if best is None else min(best, sec)
+                results.add((rows, digest))
             entry[rr + "_sec"] = best
             entry["topk_rows"] = rows
             entry[rr + "_sum"] = round(s, 6)
+        if len(results) > 1:
+            mismatched.append(name)
         # which physical route did auto resolve to? (round-13 router)
         entry["auto_route"] = (
             "arrow"
@@ -106,8 +122,13 @@ def main() -> int:
         )
         print(name, entry, flush=True)
         out["runs"][name] = entry
+    out["parity_mismatch"] = mismatched
     print(json.dumps(out))
     spark.stop()
+    if mismatched:
+        print(f"arms disagree on rows or row digest: {mismatched}",
+              file=sys.stderr)
+        return 1
     return 0
 
 

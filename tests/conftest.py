@@ -34,10 +34,12 @@ def pytest_collection_modifyitems(config, items):
 
         python -m pytest "tests/test_x.py::test_y" -m "slow or not slow"
 
-    A manifest entry that matches no collected test (a renamed or
-    deleted test) would silently move nothing into the slow tier, so it
-    is reported as a warning whenever its test file was collected or no
-    longer exists."""
+    A manifest entry that names no test function defined in its file
+    (a renamed or deleted test, or a deleted file) would silently move
+    nothing into the slow tier, so it is reported as a warning. The
+    check reads the files' own definitions, not the collected set, so
+    a run of one node id does not flag its file's other entries."""
+    import ast
     import os
     import warnings
 
@@ -47,21 +49,30 @@ def pytest_collection_modifyitems(config, items):
         return
     with open(manifest) as fh:
         slow = {line.strip() for line in fh if line.strip()}
-    collected: set[str] = set()
     for item in items:
-        nodeid = item.nodeid.removeprefix("tests/")
-        collected.add(nodeid)
-        if nodeid in slow:
+        if item.nodeid.removeprefix("tests/") in slow:
             item.add_marker(pytest.mark.slow)
-    files = {nodeid.split("::")[0] for nodeid in collected}
+    defined: dict[str, set[str]] = {}
+    for entry in slow:
+        fname = entry.split("::")[0]
+        if fname not in defined:
+            path = os.path.join(here, fname)
+            defined[fname] = set()
+            if os.path.exists(path):
+                with open(path) as fh:
+                    tree = ast.parse(fh.read())
+                defined[fname] = {
+                    node.name
+                    for node in ast.walk(tree)
+                    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                }
     stale = sorted(
-        entry for entry in slow - collected
-        if entry.split("::")[0] in files
-        or not os.path.exists(os.path.join(here, entry.split("::")[0]))
+        entry for entry in slow
+        if entry.split("::")[-1].split("[")[0] not in defined[entry.split("::")[0]]
     )
     if stale:
         warnings.warn(
-            "tests/slow_tests.txt entries match no collected test: "
-            + ", ".join(stale),
+            "tests/slow_tests.txt entries name no test defined in their "
+            "file: " + ", ".join(stale),
             pytest.PytestWarning,
         )

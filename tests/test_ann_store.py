@@ -47,6 +47,20 @@ def test_store_topk_matches_direct_operator(spark, vectors):
     assert direct and stored == direct
 
 
+def test_store_topk_duplicate_query_id_keeps_distinct_neighbors(spark, vectors):
+    """A query id given twice must not multiply at the query-vector
+    re-attach: it gets k DISTINCT neighbors ranked 1..k, the same
+    answer as the query given once."""
+    write_ann_store(vectors, "ann_store_dupq", dim=64, buckets=4)
+    one = vectors.filter(F.col("vec_id") == 3)
+    twice = one.unionByName(one)
+    got = topk_from_store(spark, "ann_store_dupq", twice, k=5, dim=64).collect()
+    assert sorted(r.rank for r in got) == [1, 2, 3, 4, 5]
+    assert len({r.neighbor_id for r in got}) == 5
+    once = topk_from_store(spark, "ann_store_dupq", one, k=5, dim=64).collect()
+    assert {tuple(r) for r in got} == {tuple(r) for r in once}
+
+
 def test_store_side_joins_are_shuffle_free(spark, vectors, no_broadcast):
     """Both store tables must reach their joins without an Exchange:
     the band join shuffles only the QUERY side, the unit-vector join

@@ -80,34 +80,54 @@ def test_arrow_rerank_empty_queries(spark, vectors, queries):
 # ---------------------------------------------------------------------------
 # Auto-routing (round 13, VERDICT r12 #2): rerank="auto" resolves the
 # route from the counts-only fan-out estimate against the measured
-# crossover ARROW_RERANK_MIN_EST_PAIRS.
+# crossover ARROW_RERANK_MIN_EST_PAIRS. The resolution lives in the
+# top-k core (_keyed_topk): these tests drive it with one vector and
+# n_queries query rows and a pair_rate that makes the estimate exact,
+# and read the resolved route off the plan (MapInPandas = arrow).
 # ---------------------------------------------------------------------------
 
 
-def test_auto_rerank_threshold_routing():
+def _auto_route(spark, est_pairs, n_queries, max_query_rows):
+    from polars_text_spark.operators.similarity import _keyed_topk
+    from polars_text_spark.plans import explain_str
+
+    vecs = spark.createDataFrame([(0, [1.0, 0.0])], ["vec_id", "embedding"])
+    qs = spark.range(n_queries).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.lit(0.0), F.lit(1.0)).alias("embedding"),
+    )
+    one_key = lambda c: F.array(F.lit("k"))  # noqa: E731
+    out = _keyed_topk(
+        vecs, qs, key="band_key", v_keys=one_key, q_keys=one_key,
+        multi_key=False, k=1, id_col="vec_id", vec_col="embedding",
+        exclude_self=False, rerank="auto",
+        pair_rate=est_pairs / n_queries, max_query_rows=max_query_rows,
+    )
+    return "arrow" if "MapInPandas" in explain_str(out, "simple") else "expr"
+
+
+def test_auto_rerank_threshold_routing(spark):
     from polars_text_spark.operators.similarity import (
         ARROW_RERANK_MIN_EST_PAIRS,
-        _auto_rerank,
     )
 
-    assert _auto_rerank(ARROW_RERANK_MIN_EST_PAIRS - 1, 64, 65536) == "expr"
-    assert _auto_rerank(ARROW_RERANK_MIN_EST_PAIRS, 64, 65536) == "arrow"
-    assert _auto_rerank(10 * ARROW_RERANK_MIN_EST_PAIRS, 64, 65536) == "arrow"
+    assert _auto_route(spark, ARROW_RERANK_MIN_EST_PAIRS - 1, 64, 65536) == "expr"
+    assert _auto_route(spark, ARROW_RERANK_MIN_EST_PAIRS, 64, 65536) == "arrow"
+    assert _auto_route(spark, 10 * ARROW_RERANK_MIN_EST_PAIRS, 64, 65536) == "arrow"
 
 
-def test_auto_rerank_warns_when_query_side_uncollectable():
+def test_auto_rerank_warns_when_query_side_uncollectable(spark):
     """Past the crossover with an uncollectable query side: fall back
     to expr, but LOUDLY — the caller can split the batch."""
     import warnings
 
     from polars_text_spark.operators.similarity import (
         ARROW_RERANK_MIN_EST_PAIRS,
-        _auto_rerank,
     )
 
     with warnings.catch_warnings(record=True) as rec:
         warnings.simplefilter("always")
-        got = _auto_rerank(2 * ARROW_RERANK_MIN_EST_PAIRS, 100_000, 65536)
+        got = _auto_route(spark, 2 * ARROW_RERANK_MIN_EST_PAIRS, 100_000, 65536)
     assert got == "expr"
     assert any("Arrow crossover" in str(w.message) for w in rec)
 
@@ -116,12 +136,13 @@ def test_auto_banded_estimate_uses_band_geometry(vectors, queries):
     """1-bit bands (the degenerate regime) must produce a much larger
     estimate than realistic bands on the SAME corpus — the structural
     property the router keys on."""
+    from polars_text_spark.operators.similarity import _band_pair_rate
+
     routes = {}
     for planes, bands_, label in ((16, 4, "realistic"), (4, 4, "onebit")):
-        r = planes // bands_
         n_v = vectors.where(F.col("embedding").isNotNull()).count()
         n_q = queries.where(F.col("embedding").isNotNull()).count()
-        routes[label] = n_v * n_q * (1.0 - (1.0 - 2.0 ** -r) ** bands_)
+        routes[label] = n_v * n_q * _band_pair_rate(planes, bands_)
     assert routes["onebit"] > 3 * routes["realistic"]
 
 

@@ -299,6 +299,52 @@ def test_cosine_topk_ivf_recall(spark):
     assert len(out) == 5
 
 
+def test_cosine_topk_ivf_drops_null_vectors(spark):
+    """A null embedding must not reach the codebook sample (a ragged
+    np.array) or the list assignment: both re-rank routes drop nulls
+    on both sides and agree on every row."""
+    rng = np.random.default_rng(5)
+    vecs = rng.standard_normal((40, 8))
+    rows = [(i, [float(x) for x in vecs[i]]) for i in range(40)]
+    rows.append((40, None))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = df.filter(F.col("vec_id").isin(0, 1, 40))
+    got = {}
+    for route in ("expr", "arrow"):
+        out = cosine_topk_ivf(
+            df, queries, k=3, n_lists=4, nprobe=2, seed=42, rerank=route
+        ).collect()
+        got[route] = {(r.query_id, r.neighbor_id, r.cosine, r.rank) for r in out}
+    assert got["expr"] and got["expr"] == got["arrow"]
+    ids = {q for q, n, _, _ in got["expr"]} | {n for _, n, _, _ in got["expr"]}
+    assert 40 not in ids
+    assert {q for q, _, _, _ in got["expr"]} == {0, 1}
+
+
+def test_embedding_dup_pairs_exact_and_finds_planted(spark):
+    """Every returned pair carries its exact cosine (>= threshold,
+    id_a < id_b), and every planted near-duplicate is found."""
+    from polars_text_spark.operators.dedup import embedding_dup_pairs
+
+    rng = np.random.default_rng(3)
+    vecs = rng.standard_normal((60, 16))
+    planted = {(a, 60 + j) for j, a in enumerate(range(0, 20, 2))}
+    dups = [vecs[a] + 0.01 * rng.standard_normal(16) for a in range(0, 20, 2)]
+    vecs = np.vstack([vecs, dups])
+    rows = [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))]
+    rows.append((len(vecs), None))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = embedding_dup_pairs(df, dim=16, threshold=0.9).collect()
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    pairs = {(r.id_a, r.id_b) for r in out}
+    assert len(pairs) == len(out)
+    for r in out:
+        assert r.id_a < r.id_b
+        exact = float(unit[r.id_a] @ unit[r.id_b])
+        assert r.cosine >= 0.9 and abs(r.cosine - exact) < 1e-9
+    assert planted <= pairs
+
+
 def test_ivf_train_sample_spans_partitions(spark):
     """Codebook training must sample ACROSS partitions, not just the
     first file — a limit()-trained codebook on sorted/sharded input
